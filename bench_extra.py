@@ -6,7 +6,12 @@ optimization work targets the real cost, and provides per-leg isolation for
 the non-encode queries. Same session config and env contract as bench.py
 ($SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS); prints one JSON line.
 
-Usage: python bench_extra.py [encode|queries|all]
+``cc`` times ``connected_components`` alone on the ``curation``
+workload's pair list (``perfbench.gen`` documents, seed 1), once as
+``minhash_lsh_pairs`` produces it and once round-robined to 8 partitions,
+and prints each layout's median, quartiles and Spark job count per rep.
+
+Usage: python bench_extra.py [encode|queries|all|cc]
 """
 
 from __future__ import annotations
@@ -37,8 +42,52 @@ def _timed(timings, name, fn, reps=2):
     timings[name] = round(best, 3)
 
 
+def cc_bench(reps: int = 7, seed: int = 1) -> None:
+    import statistics
+    import tempfile
+
+    from perfbench import gen
+    from perfbench.workloads import Curation
+
+    from lyssandra_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
+    from lyssandra_spark.operators.graph import connected_components
+    from lyssandra_spark.session import get_spark
+
+    spark = get_spark(app="lyssandra-bench-cc", cores=CPUS)
+    sc = spark.sparkContext
+    out = {}
+    with tempfile.TemporaryDirectory() as d:
+        gen.write(gen.documents(seed, Curation.N_DOCS), d)
+        docs = exact_dedup(spark.read.parquet(d))
+        pairs = minhash_lsh_pairs(docs, **Curation.DEDUP).localCheckpoint()
+        layouts = {"as_produced": pairs,
+                   "round_robin_8": pairs.repartition(8).localCheckpoint()}
+        for name, df in layouts.items():
+            times, jobs = [], set()
+            for r in range(reps + 1):  # rep 0 warms up, untimed
+                group = f"cc:{name}:{r}"
+                sc.setJobGroup(group, f"bench_extra cc {name}")
+                t0 = time.perf_counter()
+                _force(connected_components(df))
+                if r:
+                    times.append(time.perf_counter() - t0)
+                    jobs.add(len(sc.statusTracker().getJobIdsForGroup(group)))
+            q1, med, q3 = statistics.quantiles(times, n=4)
+            out[name] = {
+                "partitions": df.rdd.getNumPartitions(),
+                "median_s": round(med, 3), "q1_s": round(q1, 3),
+                "q3_s": round(q3, 3), "jobs": sorted(jobs),
+            }
+        out["edges"] = pairs.count()
+    spark.stop()
+    print(json.dumps({"metric": "connected_components on the curation pairs",
+                      "unit": "sec", "reps": reps, "cores": CPUS, **out}))
+
+
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "all"
+    if mode == "cc":
+        return cc_bench()
     from pyspark.sql import functions as F
 
     from lyssandra_spark.functions.embed import embed_column

@@ -7,24 +7,46 @@ turns an (id_a, id_b) edge table into (id, component) labels, where the
 component id is the minimum vertex id reachable (a deterministic
 canonical representative).
 
-Algorithm: min-label propagation — every vertex repeatedly takes the
-minimum label among itself and its neighbors until a fixpoint. Each
-iteration is ONE keyed shuffle (join labels to the symmetric edge list +
-groupBy min), so total cost is O(component diameter) shuffles. Near-dup
-components are shallow (dups of dups of one original), so this converges
-in a handful of rounds. For adversarially deep graphs (the long-chain
-duplicate structure) the operator now FALLS BACK, after ``max_iter``
-stalled rounds, to the large-star/small-star contraction (Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC 2014):
-alternating rounds where every vertex hangs its larger neighbors
-(large-star) / its smaller neighbors and itself (small-star) onto its
-minimum neighbor. Both operations preserve connectivity, every
-component contracts to a star centered at its minimum id in
-O(log^2 n) rounds regardless of diameter, and each round is a constant
-number of keyed shuffles over a (shrinking) edge set — so a 10^12-edge
-chain completes instead of raising. The per-iteration convergence
-checks are scalar aggregates (changed-label count; edge-set
-count + hash-sum), never a label collect.
+Algorithm: contract each partition first, then propagate labels only
+between partitions (the contraction idea of Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC 2014).
+
+1. **One ``mapInArrow`` pass of per-partition union-find.** Each Python
+   worker maps its partition's endpoints to dense ids with ``np.unique``,
+   joins them by min-hooking plus pointer jumping, and emits
+   ``(id, root)`` for every id the partition saw, ``root`` being the
+   minimum id of its local component. The pass keeps the input's
+   partitioning, so pairs coming out of a shuffle arrive in AQE-sized
+   partitions and a small pair list is a single one. Memory bound: one
+   partition's edge ids, as a few numpy arrays of its edge count, in one
+   Python worker.
+2. **Initial labels** are ``groupBy(id)`` of that output: ``min(root)``
+   and the number of partitions that saw the id, checkpointed once. If
+   no id was seen by two partitions, the local components are the
+   global ones and the labels are returned after ZERO rounds; one
+   ``isEmpty`` probe decides. A single-partition edge list always takes
+   this path.
+3. **Otherwise min-label rounds run on the star graph**: every
+   ``(id, root)`` edge in both directions plus a self-loop per labelled
+   vertex, materialized once. It has the input's connectivity and at
+   most one edge per vertex per partition. A round is ONE join of the
+   star graph to the labels and ONE ``groupBy``: the new label is the
+   minimum label over the neighbors and the self-loop, and the previous
+   label comes out of the same aggregate as the self-loop's label, so
+   the convergence probe is a filter + count of the checkpointed round
+   (a scalar, never a label collect). Near-dup components are shallow,
+   so this converges in a handful of rounds.
+4. **Fallback.** A component laid out over the partitions as a deep
+   chain (no partition holding two adjacent links) still needs
+   O(diameter) rounds. After ``max_iter`` stalled rounds the operator
+   switches to the large-star/small-star contraction of the same paper:
+   alternating rounds where every vertex hangs its larger neighbors
+   (large-star) / its smaller neighbors and itself (small-star) onto its
+   minimum neighbor. Both operations preserve connectivity, every
+   component contracts to a star centered at its minimum id in
+   O(log^2 n) rounds regardless of diameter, and each round is a
+   constant number of keyed shuffles over a (shrinking) edge set; its
+   fixpoint test is an edge-set count + hash-sum.
 
 Iterative DataFrame loops grow the logical plan without bound;
 ``localCheckpoint`` truncates lineage each round (on a real cluster with
@@ -34,14 +56,67 @@ instead — the loop structure is identical).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "connected_components",
     "retain_best_per_cluster",
     "retain_best_with_labels",
 ]
+
+
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Union-find over dense ids ``0..n-1`` joined by edges
+    ``(a[i], b[i])``: every id's root, the minimum id of its component.
+
+    Min-hooking: each edge whose endpoints sit in different trees hooks
+    the larger root under the smaller; pointer jumping then flattens
+    every tree. ``parent[x] <= x`` throughout, so no cycle can form."""
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return parent
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _local_stars(batches):
+    """``mapInArrow`` body: contract one partition's ``(u, v)`` edges to
+    one ``(id, root)`` row per id seen. An edge with a null endpoint
+    joins nothing: its other endpoint is still emitted, and the
+    partition emits one ``(null, null)`` row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    u = pa.concat_arrays([b.column(0) for b in batches])
+    v = pa.concat_arrays([b.column(1) for b in batches])
+    full = pc.and_(u.is_valid(), v.is_valid())
+    part = pc.invert(full)
+    eu, ev = u.filter(full), v.filter(full)
+    ends = pa.concat_arrays([eu, ev, u.filter(part).drop_null(),
+                             v.filter(part).drop_null()])
+    # sorted dense ids, so the min dense id of a component is its min id
+    _, first, inv = np.unique(ends.to_numpy(zero_copy_only=False),
+                              return_index=True, return_inverse=True)
+    m = len(eu)
+    ids = ends.take(first)
+    out = [ids, ids.take(_min_roots(len(first), inv[:m], inv[m:2 * m]))]
+    if u.null_count or v.null_count:
+        out = [pa.concat_arrays([c, pa.nulls(1, c.type)]) for c in out]
+    yield pa.RecordBatch.from_arrays(out, names=["id", "root"])
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -134,51 +209,60 @@ def connected_components(
 
     Returns (id, component); only vertices that appear in ``edges`` are
     labeled (an isolated doc is its own trivial cluster and never needed
-    the graph pass). If ``max_iter`` min-label rounds don't reach the
-    fixpoint (an adversarially deep component — near-dup graphs normally
-    converge in a handful of rounds), ``fallback='star'`` (default)
-    switches to the large-star/small-star contraction, which finishes in
-    O(log^2 n) further rounds regardless of diameter;
-    ``fallback='raise'`` restores the historical fail-loudly behaviour.
-    ``max_iter=0`` with the default fallback runs pure star contraction.
+    the graph pass). An edge with a null endpoint labels its other
+    endpoint as if the edge were absent and adds one ``(null, null)``
+    row. The union-find pass contracts each partition; when no id spans
+    two partitions the result needs no min-label round at all (see the
+    module docstring). If ``max_iter`` min-label rounds don't reach the
+    fixpoint (a component laid out as a deep chain across partitions),
+    ``fallback='star'`` (default) switches to the large-star/small-star
+    contraction, which finishes in O(log^2 n) further rounds regardless
+    of diameter; ``fallback='raise'`` restores the historical
+    fail-loudly behaviour. ``max_iter=0`` with the default fallback runs
+    star contraction whenever some id spans two partitions.
     """
     if fallback not in ("star", "raise"):
         raise ValueError(f"fallback {fallback!r}")
-    # materialize the symmetric edge list once — every iteration joins it,
-    # and without this each round re-reads + re-unions the source edges
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    ).localCheckpoint(eager=True)
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    # the endpoints' common type: a union of the two columns widens it
+    t = e.select("u").unionByName(e.select(F.col("v").alias("u"))) \
+        .schema["u"].dataType
+    # a lazy checkpoint, not a cache: AQE still sizes the input's last
+    # shuffle (a cached plan must keep its partitioning), and the labels
+    # job fills it for the rounds to re-read
+    stars = e.select(F.col("u").cast(t), F.col("v").cast(t)).mapInArrow(
+        _local_stars,
+        T.StructType([T.StructField("id", t), T.StructField("root", t)]),
+    ).localCheckpoint(eager=False)
     labels = (
-        sym.select(F.col("u").alias("id")).distinct()
-        .withColumn("component", F.col("id"))
+        stars.groupBy("id")
+        .agg(F.min("root").alias("component"), F.count("*").alias("n"))
         .localCheckpoint(eager=True)
     )
+    if labels.where(F.col("n") > 1).isEmpty():
+        return labels.drop("n")  # no id spans partitions: done
+    labels = labels.drop("n")
+    # materialized once through a shuffle, so AQE packs it into as few
+    # partitions as its size needs and a round scans that many, not one
+    # per input partition
+    star = stars.where(F.col("id") != F.col("root"))
+    sym = star.select(F.col("id").alias("u"), F.col("root").alias("v")) \
+        .unionByName(star.select(F.col("root").alias("u"),
+                                 F.col("id").alias("v"))) \
+        .unionByName(labels.select(F.col("id").alias("u"),
+                                   F.col("id").alias("v"))) \
+        .repartition("v").localCheckpoint(eager=True)
     for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(
-                labels.select(F.col("id").alias("v"),
-                              F.col("component").alias("vcomp")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vcomp").alias("nmin"))
-        )
-        # carry the previous label through the select so the convergence
-        # probe is a filter+count on the checkpointed result — not an
-        # extra labels-vs-new_labels shuffle join per round
+        # left join: the null id's self-loop matches no label, but its
+        # (null, null) row must survive the round
         stepped = (
-            labels.join(neighbor_min,
-                        labels["id"] == neighbor_min["u"], "left")
-            .select(
-                "id",
-                F.col("component").alias("prev"),
-                F.least(F.col("component"),
-                        F.coalesce(F.col("nmin"), F.col("component"))
-                        ).alias("component"),
-            )
+            sym.join(labels.select(F.col("id").alias("v"),
+                                   F.col("component").alias("vcomp")),
+                     "v", "left")
+            .groupBy(F.col("u").alias("id"))
+            .agg(F.min("vcomp").alias("component"),
+                 F.max(F.when(F.col("u") == F.col("v"), F.col("vcomp")))
+                 .alias("prev"))
             .localCheckpoint(eager=True)  # truncate iterative lineage
         )
         changed = stepped.where(F.col("component") != F.col("prev")).count()

@@ -733,7 +733,10 @@ def _segment_accumulate(
     difference from ``add.at`` is one association in the running total
     (batch subtotal added to ``sums`` at once), i.e. up-to-ulp — within
     the refine passes' documented determinism contract (float summation
-    order already varies with partitioning)."""
+    order already varies with partitioning). An empty ``a`` adds nothing,
+    as ``np.add.at`` would."""
+    if len(a) == 0:
+        return
     order = np.argsort(a, kind="stable")
     a_sorted = a[order]
     seg = np.concatenate(([0], np.nonzero(np.diff(a_sorted))[0] + 1))

@@ -1,10 +1,11 @@
 """Connected components: vs a python union-find oracle, worst-case chain
-convergence, partition invariance."""
+convergence, partition invariance, null endpoints and string ids."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lyssandra_spark.operators import graph
 from lyssandra_spark.operators.graph import connected_components
 
 
@@ -29,10 +30,42 @@ def _uf_oracle(edges):
     return comp
 
 
+def _labels(df, **kw):
+    return {r["id"]: r["component"]
+            for r in connected_components(df, **kw).collect()}
+
+
 def _run(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = connected_components(df, **kw).collect()
-    return {r["id"]: r["component"] for r in got}
+    return _labels(spark.createDataFrame(edges, "id_a long, id_b long"), **kw)
+
+
+def _sliced(spark, edges, n, schema="id_a long, id_b long"):
+    """``edges`` in ``n`` partitions of consecutive rows."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(edges, n),
+                                 schema)
+
+
+def _interleaved(spark, edges, k):
+    """Edge ``(a, b)`` in partition ``a % k``: no partition holds two
+    adjacent links of a chain ``(i, i + 1)``, so the per-partition
+    union-find contracts nothing and the chain stays as deep as it is."""
+    rdd = (spark.sparkContext.parallelize(edges)
+           .keyBy(lambda e: e[0] % k).partitionBy(k, lambda p: p).values())
+    return spark.createDataFrame(rdd, "id_a long, id_b long")
+
+
+@pytest.fixture
+def star_calls(monkeypatch):
+    """Records each run of the large-star/small-star fallback."""
+    calls = []
+    real = graph._star_components
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(graph, "_star_components", spy)
+    return calls
 
 
 def test_cc_matches_union_find_random(spark):
@@ -57,21 +90,25 @@ def test_cc_chain_worst_case(spark):
     assert len(got) == 25
 
 
-def test_cc_deep_chain_star_fallback(spark):
+def test_cc_deep_chain_star_fallback(spark, star_calls):
     """A chain DEEPER than the min-label round cap: min-label alone would
     raise at max_iter, but the large-star/small-star fallback contracts
     the remaining path in O(log^2 n) rounds and converges to the same
-    min-id labels (this used to be the documented failure mode)."""
+    min-id labels (this used to be the documented failure mode). The
+    links alternate between two partitions, so the per-partition
+    union-find cannot shorten the chain, and the spy shows the fallback
+    ran."""
     edges = [(i, i + 1) for i in range(80)]
-    got = _run(spark, edges, max_iter=5)
+    got = _labels(_interleaved(spark, edges, 2), max_iter=5)
+    assert star_calls
     assert set(got.values()) == {0}
     assert len(got) == 81
 
 
-def test_cc_pure_star_matches_union_find(spark):
-    """max_iter=0 runs pure star contraction — must equal the union-find
-    oracle on random multi-component graphs, including isolated chains
-    and partition invariance."""
+def test_cc_pure_star_matches_union_find(spark, star_calls):
+    """max_iter=0 runs pure star contraction once ids span partitions —
+    must equal the union-find oracle on random multi-component graphs,
+    including isolated chains and partition invariance."""
     rng = np.random.default_rng(17)
     edges = [
         (int(a), int(b))
@@ -81,6 +118,7 @@ def test_cc_pure_star_matches_union_find(spark):
     exp = _uf_oracle(edges)
     got = _run(spark, edges, max_iter=0)
     assert got == exp
+    assert star_calls
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(7)
     got_r = {r["id"]: r["component"]
              for r in connected_components(df, max_iter=0).collect()}
@@ -102,11 +140,67 @@ def test_cc_empty_edges(spark):
     assert connected_components(df).count() == 0
 
 
-def test_cc_nonconvergence_raises(spark):
-    df = spark.createDataFrame([(i, i + 1) for i in range(10)],
-                               "id_a long, id_b long")
+def test_cc_nonconvergence_raises(spark, star_calls):
+    """A 10-link chain alternating between two partitions needs more
+    than 2 rounds; ``fallback='raise'`` raises instead of contracting."""
+    df = _interleaved(spark, [(i, i + 1) for i in range(10)], 2)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2, fallback="raise")
+    assert not star_calls
+
+
+@pytest.mark.parametrize("seed", [3, 29])
+def test_cc_union_find_property_across_partitionings(spark, seed):
+    """Random multi-component graphs with duplicate edges, reversed
+    edges, self-loops and a planted 40-link chain, in shuffled row order:
+    labels equal the union-find oracle at 1, 3 and 7 partitions."""
+    rng = np.random.default_rng(seed)
+    n_v = int(rng.integers(60, 200))
+    base = [(int(a), int(b))
+            for a, b in rng.integers(0, n_v, size=(int(n_v * 1.2), 2))]
+    picks = [base[i] for i in rng.integers(0, len(base), 30)]
+    edges = (
+        base
+        + picks[:15]  # duplicates
+        + [(b, a) for a, b in picks[15:]]  # reversed duplicates
+        + [(int(x), int(x)) for x in rng.integers(0, n_v + 40, 8)]  # loops
+        + [(500 + i, 501 + i) for i in range(40)]  # planted chain
+    )
+    edges = [edges[i] for i in rng.permutation(len(edges))]
+    exp = _uf_oracle(edges)
+    for n in (1, 3, 7):
+        assert _labels(_sliced(spark, edges, n)) == exp, n
+
+
+def test_cc_single_partition_needs_no_round(spark, star_calls):
+    """One partition's union-find already is the global answer, so even
+    ``max_iter=0, fallback='raise'`` returns the oracle labels."""
+    rng = np.random.default_rng(13)
+    edges = [(int(a), int(b)) for a, b in rng.integers(0, 90, (120, 2))] \
+        + [(500 + i, 501 + i) for i in range(40)]
+    got = _labels(_sliced(spark, edges, 1), max_iter=0, fallback="raise")
+    assert got == _uf_oracle(edges)
+    assert not star_calls
+
+
+@pytest.mark.parametrize("n_parts", [1, 5])
+def test_cc_null_endpoints(spark, n_parts):
+    """An edge with a null endpoint labels its other endpoint as if the
+    edge were absent and yields one (null, null) row, whether the union-
+    find pass settles everything (1 partition) or rounds run (one edge
+    per partition, the null seen by two of them)."""
+    edges = [(1, 2), (2, None), (None, 3), (4, 4), (5, 6)]
+    got = connected_components(_sliced(spark, edges, n_parts)).collect()
+    assert len(got) == 7
+    assert {r["id"]: r["component"] for r in got} == {
+        1: 1, 2: 1, 3: 3, 4: 4, 5: 5, 6: 5, None: None}
+
+
+@pytest.mark.parametrize("n_parts", [1, 3])
+def test_cc_string_ids(spark, n_parts):
+    edges = [("b", "a"), ("c", "b"), ("x", "y")]
+    df = _sliced(spark, edges, n_parts, "id_a string, id_b string")
+    assert _labels(df) == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
 def test_dedup_retention_keep_best_per_cluster(spark):

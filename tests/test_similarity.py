@@ -140,6 +140,25 @@ def test_kmeans_refine_moves_toward_cell_means(spark, emb, emb_np):
     np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
 
 
+def test_segment_accumulate_empty_and_matches_add_at():
+    """An empty assignment array is a no-op (as ``np.add.at`` is), and a
+    non-empty one adds the same per-cell sums and counts as ``add.at``."""
+    sums, counts = np.ones((3, 2)), np.arange(3)
+    S._segment_accumulate(sums, counts, np.array([], dtype=np.int64),
+                          np.empty((0, 2)))
+    np.testing.assert_array_equal(sums, np.ones((3, 2)))
+    np.testing.assert_array_equal(counts, np.arange(3))
+
+    rng = np.random.default_rng(2)
+    a, X = rng.integers(0, 3, 20), rng.normal(size=(20, 2))
+    exp_s, exp_c = sums.copy(), counts.copy()
+    np.add.at(exp_s, a, X)
+    np.add.at(exp_c, a, 1)
+    S._segment_accumulate(sums, counts, a, X)
+    np.testing.assert_allclose(sums, exp_s, rtol=1e-12)
+    np.testing.assert_array_equal(counts, exp_c)
+
+
 def test_assign_cells_arrow_matches_numpy(spark, emb, emb_np):
     """Broadcast-centroid Arrow assignment == numpy argmin/argsort
     (ascending distance, ties by ascending cell id), across partitionings."""
