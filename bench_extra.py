@@ -11,7 +11,14 @@ workload's pair list (``perfbench.gen`` documents, seed 1), once as
 ``minhash_lsh_pairs`` produces it and once round-robined to 8 partitions,
 and prints each layout's median, quartiles and Spark job count per rep.
 
-Usage: python bench_extra.py [encode|queries|all|cc]
+``refresh`` walks the five watermark consumers (``refresh_ivf_index``,
+``refresh_pq_index``, ``refresh_ivfpq_index``, ``refresh_postings``,
+``refresh_aggregate``) over one small synthetic source chain through
+rebuild -> no-op -> re-ingest -> compact+expire -> delta, and prints per
+(consumer, branch) the Spark job count, the mode of the consumer table's
+newest snapshot and the wall time.
+
+Usage: python bench_extra.py [encode|queries|all|cc|refresh]
 """
 
 from __future__ import annotations
@@ -84,10 +91,81 @@ def cc_bench(reps: int = 7, seed: int = 1) -> None:
                       "unit": "sec", "reps": reps, "cores": CPUS, **out}))
 
 
+def refresh_bench(n_rows: int = 600, dim: int = 16, seed: int = 1) -> None:
+    import tempfile
+
+    import numpy as np
+
+    from lyssandra_spark.operators.ann_index import (
+        refresh_ivf_index, refresh_ivfpq_index, refresh_pq_index)
+    from lyssandra_spark.operators.incremental import refresh_aggregate
+    from lyssandra_spark.operators.search import refresh_postings
+    from lyssandra_spark.session import get_spark
+    from lyssandra_spark.sources.catalog import ParquetCatalog
+
+    spark = get_spark(app="lyssandra-bench-refresh", cores=CPUS)
+    sc = spark.sparkContext
+    rng = np.random.default_rng(seed)
+    X = rng.normal(size=(n_rows, dim))
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    rows = [
+        (i, [float(v) for v in X[i]],
+         " ".join(rng.choice(words, size=5)), i % 7, float(X[i, 0]))
+        for i in range(n_rows)
+    ]
+    src = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, text string, "
+        "grp int, x double")
+    ann = dict(sample_rows=128)
+    consumers = {
+        "ivf": lambda c: refresh_ivf_index(c, "src", "ivf", n_cells=8, **ann),
+        "pq": lambda c: refresh_pq_index(c, "src", "pq", m=4, n_codes=16,
+                                         **ann),
+        "ivfpq": lambda c: refresh_ivfpq_index(
+            c, "src", "ivfpq", n_cells=8, m=4, n_codes=16, **ann),
+        "postings": lambda c: refresh_postings(c, "src", "postings",
+                                               id_col="vec_id"),
+        "aggregate": lambda c: refresh_aggregate(c, "src", "aggregate",
+                                                 "grp", ["x"]),
+    }
+    first, reingested = n_rows * 2 // 3, n_rows // 6
+    steps = [
+        ("rebuild", lambda c: c.write(
+            src.where(f"vec_id < {first}"), "src", mode="overwrite")),
+        ("noop", lambda c: None),
+        ("reingest", lambda c: c.write(
+            src.where(f"vec_id < {reingested}"), "src", mode="append")),
+        ("compact_expire", lambda c: (c.compact("src"), c.expire("src"))),
+        ("delta", lambda c: c.write(
+            src.where(f"vec_id >= {first}"), "src", mode="append")),
+    ]
+    out = {name: {} for name in consumers}
+    with tempfile.TemporaryDirectory() as d:
+        cat = ParquetCatalog(spark, d)
+        for branch, mutate in steps:
+            mutate(cat)
+            for name, refresh in consumers.items():
+                group = f"refresh:{name}:{branch}"
+                sc.setJobGroup(group, f"bench_extra refresh {name} {branch}")
+                t0 = time.perf_counter()
+                refresh(cat)
+                dt = time.perf_counter() - t0
+                out[name][branch] = {
+                    "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                    "mode": cat.snapshots(name)[-1]["mode"],
+                    "s": round(dt, 3),
+                }
+    spark.stop()
+    print(json.dumps({"metric": "watermark refresh per consumer and branch",
+                      "rows": n_rows, "dim": dim, "cores": CPUS, **out}))
+
+
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "all"
     if mode == "cc":
         return cc_bench()
+    if mode == "refresh":
+        return refresh_bench()
     from pyspark.sql import functions as F
 
     from lyssandra_spark.functions.embed import embed_column

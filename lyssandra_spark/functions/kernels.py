@@ -449,7 +449,14 @@ def llc(
     constrained least squares  min ||x - B w||^2 s.t. 1^T w = 1  in closed
     form: C = (B - x 1^T)^T (B - x 1^T); solve (C + beta*tr(C)*I) w = 1;
     w /= sum(w). Scatter w into the sparse code. Columns processed in
-    cache-sized chunks (per-sample independent => chunk-invariant).
+    cache-sized chunks of ``block`` samples. Each sample's solve is
+    independent, but the distance GEMM runs per chunk and BLAS results
+    depend on the operand shape, so codes are chunk-invariant only up to
+    ulps — and a support holding near-duplicate atoms leaves the
+    barely-regularized solve ill-conditioned enough to amplify those
+    ulps into visible differences (0.13 observed between block 256 and
+    512 on a dictionary with duplicated atoms). Use one fixed ``block``
+    where bit-exact reproducibility matters.
 
     knn selection determinism: stable argsort => lowest atom index wins ties.
     """

@@ -26,11 +26,18 @@ assignments once, then serves queries from the index alone:
   and the exact re-rank touches true vectors for the candidate set
   only.
 
-Freshness semantics (shared with the postings index): a watermark in
-the manifest meta records the newest source snapshot folded in; a
-source overwrite or an expired delta snapshot routes to a full rebuild;
-meta survives audit-only compaction via ``latest_meta`` and dies at a
-destructive overwrite. Frozen-artifact caveat, stated plainly: delta
+Freshness semantics: all three refreshes run one private state machine
+(``_refresh_index``), and its watermark step is
+:class:`~lyssandra_spark.sources.catalog.Watermark` — the same helper
+behind :func:`~lyssandra_spark.operators.search.refresh_postings` and
+:func:`~lyssandra_spark.operators.incremental.refresh_aggregate`. The
+manifest meta records the index spec and the newest source snapshot
+folded in (``<kind>_spec`` / ``<kind>_last_snap``); a source overwrite
+or an expired delta snapshot routes to a full rebuild; an audit-only
+source compaction, and a delta whose ids are all indexed already, only
+advance the watermark; meta survives audit-only compaction via
+``latest_meta`` and dies at a destructive overwrite. Frozen-artifact
+caveat, stated plainly: delta
 batches are quantized under the ORIGINAL centroids/codebooks, so if the
 embedding distribution drifts, recall decays until a rebuild — exactly
 the re-train/re-index cadence real IVF/PQ deployments schedule. That
@@ -65,7 +72,7 @@ from lyssandra_spark.operators.similarity import (
     tag_cell,
     tag_probe_cells,
 )
-from lyssandra_spark.sources.catalog import consumer_needs_rebuild
+from lyssandra_spark.sources.catalog import Watermark
 
 __all__ = [
     "refresh_ivf_index", "ivf_topk_indexed",
@@ -260,42 +267,6 @@ def needs_retrain(catalog, table: str, threshold: float = 1.5,
     )
 
 
-def _chain_state(catalog, src_table: str, index_table: str, spec_key: str,
-                 spec: dict, force: bool = False):
-    """Shared watermark bookkeeping: returns (src_snaps, newest,
-    needs_rebuild, last, idx_snaps, skip). Loud error on a spec
-    mismatch (unless ``force`` — a forced rebuild replaces the whole
-    index, so a NEW spec is legitimate there). The identity comparison
-    is deliberately EXACT, so an index chain written under different
-    defaults (e.g. pre-round-8 ``refine_iters=0``) fails loudly on the
-    next refresh instead of silently mixing artifact generations — the
-    remedy the error names is ``force_rebuild``, a one-time retrain; a dead watermark
-    (destructive overwrite) or an expired delta snapshot routes to
-    rebuild. A source ``compact()`` whose folded snapshots were all
-    already indexed is audit-only for this consumer: no rebuild, and
-    its id lands in ``skip`` so the delta scan never re-reads the
-    corpus blob (see :func:`~lyssandra_spark.sources.catalog
-    .incremental_chain_start`)."""
-    src_snaps = catalog.snapshots(src_table)
-    if not src_snaps:
-        raise FileNotFoundError(f"no snapshots for source {src_table!r}")
-    newest = src_snaps[-1]["id"]
-    idx_snaps = catalog.snapshots(index_table)
-    head_meta = (
-        (catalog.latest_meta(index_table, spec_key) or {}) if idx_snaps else {}
-    )
-    if idx_snaps and head_meta and head_meta.get(spec_key) != spec \
-            and not force:
-        raise ValueError(
-            f"refresh spec {spec} does not match the index table's "
-            f"{head_meta.get(spec_key)} — use a different index_table or "
-            "force_rebuild"
-        )
-    last = head_meta.get(spec_key[:-5] + "_last_snap") if head_meta else None
-    needs_rebuild, skip = consumer_needs_rebuild(src_snaps, last)
-    return src_snaps, newest, needs_rebuild, last, idx_snaps, skip
-
-
 def _dedup_src(catalog, src_table: str, id_col: str, emb_col: str) -> DataFrame:
     """Full-chain read collapsed to one row per id, deterministically
     (min embedding per id — identity for valid unique-id corpora, the
@@ -308,24 +279,117 @@ def _dedup_src(catalog, src_table: str, id_col: str, emb_col: str) -> DataFrame:
     )
 
 
-def _delta_new_rows(catalog, src_table: str, index_table: str, src_snaps,
-                    last: int, id_col: str, cols: list[str],
-                    skip: set[int] = frozenset()) -> DataFrame | None:
-    """Union the delta snapshots (minus audit-only compactions in
-    ``skip``), collapse duplicate ids, anti-join the already-indexed
-    ids (re-ingest guard — the id IS the identity). None when every
-    new snapshot was skipped (watermark-only refresh)."""
-    delta = None
-    for s in src_snaps:
-        if s["id"] <= last or s["id"] in skip:
-            continue
-        piece = catalog.read_snapshot(src_table, s["id"]).select(*cols)
-        delta = piece if delta is None else delta.unionByName(piece)
+def _refresh_index(catalog, src_table: str, index_table: str, kind: str,
+                   spec: dict, keys: tuple, train, assign, row_err, sort_by,
+                   drift_metrics: bool, force_rebuild: bool,
+                   auto_retrain: float | None) -> int:
+    """The one refresh state machine of the persisted ANN indexes; the
+    kinds differ only in their artifacts. ``train(corpus, sample)``
+    returns the artifacts in ``keys`` order (the manifest-meta keys
+    they are recorded under), ``assign(df, *artifacts)`` appends the
+    per-vector assignment, ``row_err(*artifacts)`` is the drift measure
+    for :func:`mean_quantization_error`, and ``sort_by`` the write's
+    sort order. ``spec`` is the index identity (it carries ``id_col``,
+    ``emb_col`` and ``sample_rows``); the watermark bookkeeping is
+    :class:`~lyssandra_spark.sources.catalog.Watermark`'s."""
+    if auto_retrain is not None and not drift_metrics:
+        raise ValueError(
+            "auto_retrain needs drift_metrics=True — without the drift "
+            "record there is no signal to act on"
+        )
+    id_col, emb_col = spec["id_col"], spec["emb_col"]
+    drift_key = f"{kind}_drift"
+    wm = Watermark(catalog, src_table, index_table, kind, spec, role="index",
+                   remedy="force_rebuild", force=force_rebuild)
+    if wm.rebuild:
+        # persist: the dedup'd full-chain frame feeds the sample
+        # collect, each refine pass, the drift pass, and the final
+        # write — without the cache that groupBy-agg over the whole
+        # corpus re-runs up to 4x
+        corpus = _dedup_src(catalog, src_table, id_col, emb_col).persist()
+        try:
+            sample = _training_sample(corpus, id_col, emb_col,
+                                      spec["sample_rows"])
+            if sample.size == 0:
+                raise ValueError(
+                    f"refresh_{kind}_index requires a non-empty source"
+                )
+            arts = train(corpus, sample)
+            meta = wm.stamp(**{k: a.tolist()
+                               for k, a in zip(keys, arts)})
+            if drift_metrics:
+                q, n = mean_quantization_error(corpus, emb_col,
+                                               row_err(*arts))
+                meta[drift_key] = _drift_meta(q, n, None)
+            return catalog.write(
+                assign(corpus, *arts), index_table, mode="overwrite",
+                sort_by=sort_by, meta=meta,
+            )
+        finally:
+            corpus.unpersist()
+    if wm.noop:
+        return wm.snaps[-1]["id"]
+    prior_drift = catalog.latest_meta(index_table, drift_key)
+    if auto_retrain is not None and prior_drift is None:
+        raise ValueError(
+            "auto_retrain has no baseline on this chain (it predates "
+            "drift metrics) — run once with force_rebuild=True first"
+        )
+    delta = wm.delta([id_col, emb_col])
     if delta is None:
-        return None
-    delta = delta.dropDuplicates([id_col])
-    indexed_ids = catalog.read(index_table).select(id_col).distinct()
-    return delta.join(indexed_ids, id_col, "left_anti")
+        return wm.advance()  # audit-only compaction: watermark only
+    # persist: the delta plan carries an anti-join whose right side
+    # scans the WHOLE index's ids — pay it once for the emptiness
+    # probe, the drift pass, AND the write. The try/finally covers the
+    # drift pass too: it raises on null/ragged vectors, and a failed
+    # pass must not leave the delta cached.
+    delta = wm.unindexed(delta, id_col).select(
+        id_col, F.col(emb_col).cast("array<double>").alias(emb_col)
+    ).persist()
+    try:
+        if delta.count() == 0:
+            return wm.advance()  # all ids re-ingested: watermark only
+        arts = [
+            np.asarray((catalog.latest_meta(index_table, k) or {})[k],
+                       dtype=np.float64)
+            for k in keys
+        ]
+        meta = wm.stamp()
+        if drift_metrics and prior_drift is not None:
+            # the batch's error under the FROZEN artifacts vs the
+            # baseline recorded at training — the drift signal
+            # needs_retrain reads
+            q, n = mean_quantization_error(delta, emb_col, row_err(*arts))
+            meta[drift_key] = _drift_meta(
+                q, n, prior_drift[drift_key]["baseline_qerr"]
+            )
+        sid = catalog.write(
+            assign(delta, *arts), index_table, mode="append",
+            sort_by=sort_by, meta=meta,
+        )
+    finally:
+        delta.unpersist()
+    if auto_retrain is not None and drift_key in meta and needs_retrain(
+        catalog, index_table, threshold=auto_retrain, drift_key=drift_key
+    ):
+        # the batch that just folded drifted past the caller's budget:
+        # rebuild NOW (full-chain retrain, fresh baseline) — opt-in
+        return _refresh_index(
+            catalog, src_table, index_table, kind, spec, keys, train,
+            assign, row_err, sort_by, drift_metrics, force_rebuild=True,
+            auto_retrain=None,
+        )
+    return sid
+
+
+def _train_centroids(corpus: DataFrame, sample: np.ndarray, n_cells: int,
+                     seed: int, refine_iters: int, emb_col: str) -> np.ndarray:
+    """IVF coarse quantizer: seeded Lloyd on the sample, then
+    ``refine_iters`` full-corpus distributed Lloyd passes."""
+    C = _lloyd_centroids(sample, n_cells, seed=seed)
+    if refine_iters > 0:
+        C = kmeans_refine(corpus, C, emb_col=emb_col, n_iter=refine_iters)
+    return C
 
 
 def refresh_ivf_index(
@@ -369,111 +433,18 @@ def refresh_ivf_index(
     opt-in, because at 100 TB the rebuild is a full-corpus retrain the
     caller must be willing to pay inside this call.
     """
-    if auto_retrain is not None and not drift_metrics:
-        raise ValueError(
-            "auto_retrain needs drift_metrics=True — without the drift "
-            "record there is no signal to act on"
-        )
     spec = {"src": src_table, "id_col": id_col, "emb_col": emb_col,
             "n_cells": n_cells, "sample_rows": sample_rows, "seed": seed,
             "refine_iters": refine_iters}
-    src_snaps, newest, rebuild, last, idx_snaps, skip = _chain_state(
-        catalog, src_table, index_table, "ivf_spec", spec,
-        force=force_rebuild,
+    return _refresh_index(
+        catalog, src_table, index_table, "ivf", spec, ("centroids",),
+        train=lambda corpus, sample: (_train_centroids(
+            corpus, sample, n_cells, seed, refine_iters, emb_col),),
+        assign=lambda df, C: tag_cell(df, C, emb_col, out_col="cell"),
+        row_err=_ivf_row_err, sort_by=["cell"],
+        drift_metrics=drift_metrics, force_rebuild=force_rebuild,
+        auto_retrain=auto_retrain,
     )
-    if rebuild or force_rebuild:
-        # persist: the dedup'd full-chain frame feeds the sample
-        # collect, each refine pass, the drift pass, and the final
-        # write — without the cache that groupBy-agg over the whole
-        # corpus re-runs up to 4x
-        corpus = _dedup_src(catalog, src_table, id_col, emb_col).persist()
-        try:
-            sample = _training_sample(corpus, id_col, emb_col, sample_rows)
-            if sample.size == 0:
-                raise ValueError(
-                    "refresh_ivf_index requires a non-empty source"
-                )
-            C = _lloyd_centroids(sample, n_cells, seed=seed)
-            if refine_iters > 0:
-                C = kmeans_refine(corpus, C, emb_col=emb_col,
-                                  n_iter=refine_iters)
-            tagged = tag_cell(corpus, C, emb_col, out_col="cell")
-            meta = {"ivf_spec": spec, "ivf_last_snap": newest,
-                    "centroids": [[float(v) for v in row] for row in C]}
-            if drift_metrics:
-                q, n = mean_quantization_error(corpus, emb_col,
-                                               _ivf_row_err(C))
-                meta["ivf_drift"] = _drift_meta(q, n, None)
-            return catalog.write(
-                tagged, index_table, mode="overwrite", sort_by=["cell"],
-                meta=meta,
-            )
-        finally:
-            corpus.unpersist()
-    if last >= newest:
-        return idx_snaps[-1]["id"]  # nothing new: no-op
-    prior_drift = catalog.latest_meta(index_table, "ivf_drift")
-    if auto_retrain is not None and prior_drift is None:
-        raise ValueError(
-            "auto_retrain has no baseline on this chain (it predates "
-            "drift metrics) — run once with force_rebuild=True first"
-        )
-    delta = _delta_new_rows(catalog, src_table, index_table, src_snaps, last,
-                            id_col, [id_col, emb_col], skip)
-    if delta is None:
-        # audit-only compaction: advance the watermark only
-        return catalog.write(
-            catalog.read(index_table).limit(0), index_table, mode="append",
-            meta={"ivf_spec": spec, "ivf_last_snap": newest},
-        )
-    # persist: the delta plan carries an anti-join whose right side
-    # scans the WHOLE index's ids — pay it once for the emptiness
-    # probe, the drift pass, AND the write. The try/finally covers the
-    # drift pass too: it raises on null/ragged vectors, and a failed
-    # pass must not leave the delta cached.
-    delta = delta.select(
-        id_col, F.col(emb_col).cast("array<double>").alias(emb_col)
-    ).persist()
-    try:
-        if delta.count() == 0:
-            # all ids re-ingested: advance the watermark only
-            return catalog.write(
-                catalog.read(index_table).limit(0), index_table,
-                mode="append",
-                meta={"ivf_spec": spec, "ivf_last_snap": newest},
-            )
-        C = np.asarray(
-            (catalog.latest_meta(index_table, "centroids") or {})
-            ["centroids"],
-            dtype=np.float64,
-        )
-        meta = {"ivf_spec": spec, "ivf_last_snap": newest}
-        if drift_metrics and prior_drift is not None:
-            # the batch's error under the FROZEN centroids vs the
-            # baseline recorded at training — the drift signal
-            # needs_retrain reads
-            q, n = mean_quantization_error(delta, emb_col, _ivf_row_err(C))
-            meta["ivf_drift"] = _drift_meta(
-                q, n, prior_drift["ivf_drift"]["baseline_qerr"]
-            )
-        sid = catalog.write(
-            tag_cell(delta, C, emb_col, out_col="cell"), index_table,
-            mode="append", sort_by=["cell"], meta=meta,
-        )
-    finally:
-        delta.unpersist()
-    if auto_retrain is not None and "ivf_drift" in meta and needs_retrain(
-        catalog, index_table, threshold=auto_retrain, drift_key="ivf_drift"
-    ):
-        # the batch that just folded drifted past the caller's budget:
-        # rebuild NOW (full-chain retrain, fresh baseline) — opt-in
-        return refresh_ivf_index(
-            catalog, src_table, index_table, id_col=id_col, emb_col=emb_col,
-            n_cells=n_cells, sample_rows=sample_rows, seed=seed,
-            refine_iters=refine_iters, drift_metrics=drift_metrics,
-            force_rebuild=True,
-        )
-    return sid
 
 
 def ivf_topk_indexed(
@@ -568,99 +539,26 @@ def refresh_pq_index(
     ``auto_retrain=<threshold>`` does so automatically inside this call
     when the just-folded batch drifts past threshold x baseline (opt-in
     — the rebuild is a full-corpus retrain)."""
-    if auto_retrain is not None and not drift_metrics:
-        raise ValueError(
-            "auto_retrain needs drift_metrics=True — without the drift "
-            "record there is no signal to act on"
-        )
     spec = {"src": src_table, "id_col": id_col, "emb_col": emb_col,
             "m": m, "n_codes": n_codes, "sample_rows": sample_rows,
             "seed": seed, "refine_iters": refine_iters}
-    src_snaps, newest, rebuild, last, idx_snaps, skip = _chain_state(
-        catalog, src_table, index_table, "pq_spec", spec,
-        force=force_rebuild,
+
+    def train(corpus, sample):
+        nrm = np.linalg.norm(sample, axis=1, keepdims=True)
+        books = pq_train(sample / np.maximum(nrm, 1e-300), m=m,
+                         n_codes=n_codes, seed=seed)
+        if refine_iters > 0:
+            books = pq_refine(corpus, books, emb_col=emb_col,
+                              n_iter=refine_iters)
+        return (books,)
+
+    return _refresh_index(
+        catalog, src_table, index_table, "pq", spec, ("codebooks",), train,
+        assign=lambda df, books: pq_assign_codes(df, books, id_col, emb_col),
+        row_err=_pq_row_err, sort_by=None,
+        drift_metrics=drift_metrics, force_rebuild=force_rebuild,
+        auto_retrain=auto_retrain,
     )
-    if rebuild or force_rebuild:
-        # persist: sample collect + refine pass(es) + drift pass + write
-        # all read this full-chain groupBy-agg (see the IVF twin)
-        corpus = _dedup_src(catalog, src_table, id_col, emb_col).persist()
-        try:
-            sample = _training_sample(corpus, id_col, emb_col, sample_rows)
-            if sample.size == 0:
-                raise ValueError(
-                    "refresh_pq_index requires a non-empty source"
-                )
-            nrm = np.linalg.norm(sample, axis=1, keepdims=True)
-            books = pq_train(sample / np.maximum(nrm, 1e-300), m=m,
-                             n_codes=n_codes, seed=seed)
-            if refine_iters > 0:
-                books = pq_refine(corpus, books, emb_col=emb_col,
-                                  n_iter=refine_iters)
-            coded = pq_assign_codes(corpus, books, id_col, emb_col)
-            meta = {"pq_spec": spec, "pq_last_snap": newest,
-                    "codebooks": books.tolist()}
-            if drift_metrics:
-                q, n = mean_quantization_error(corpus, emb_col,
-                                               _pq_row_err(books))
-                meta["pq_drift"] = _drift_meta(q, n, None)
-            return catalog.write(coded, index_table, mode="overwrite",
-                                 meta=meta)
-        finally:
-            corpus.unpersist()
-    if last >= newest:
-        return idx_snaps[-1]["id"]
-    prior_drift = catalog.latest_meta(index_table, "pq_drift")
-    if auto_retrain is not None and prior_drift is None:
-        raise ValueError(
-            "auto_retrain has no baseline on this chain (it predates "
-            "drift metrics) — run once with force_rebuild=True first"
-        )
-    delta = _delta_new_rows(catalog, src_table, index_table, src_snaps, last,
-                            id_col, [id_col, emb_col], skip)
-    if delta is None:
-        return catalog.write(
-            catalog.read(index_table).limit(0), index_table, mode="append",
-            meta={"pq_spec": spec, "pq_last_snap": newest},
-        )
-    # same persist-once rationale as the IVF path above — and the same
-    # widened try/finally, so a drift pass that raises (null/ragged
-    # vectors) never leaves the delta cached
-    delta = delta.persist()
-    try:
-        if delta.count() == 0:
-            return catalog.write(
-                catalog.read(index_table).limit(0), index_table,
-                mode="append",
-                meta={"pq_spec": spec, "pq_last_snap": newest},
-            )
-        books = np.asarray(
-            (catalog.latest_meta(index_table, "codebooks") or {})
-            ["codebooks"],
-            dtype=np.float64,
-        )
-        meta = {"pq_spec": spec, "pq_last_snap": newest}
-        if drift_metrics and prior_drift is not None:
-            q, n = mean_quantization_error(delta, emb_col,
-                                           _pq_row_err(books))
-            meta["pq_drift"] = _drift_meta(
-                q, n, prior_drift["pq_drift"]["baseline_qerr"]
-            )
-        sid = catalog.write(
-            pq_assign_codes(delta, books, id_col, emb_col), index_table,
-            mode="append", meta=meta,
-        )
-    finally:
-        delta.unpersist()
-    if auto_retrain is not None and "pq_drift" in meta and needs_retrain(
-        catalog, index_table, threshold=auto_retrain, drift_key="pq_drift"
-    ):
-        return refresh_pq_index(
-            catalog, src_table, index_table, id_col=id_col, emb_col=emb_col,
-            m=m, n_codes=n_codes, sample_rows=sample_rows, seed=seed,
-            refine_iters=refine_iters, drift_metrics=drift_metrics,
-            force_rebuild=True,
-        )
-    return sid
 
 
 def _rerank_exact(catalog, index_table: str, cand: "DataFrame",
@@ -1298,112 +1196,33 @@ def refresh_ivfpq_index(
     reconstruction error (``ivfpq_drift``) for :func:`needs_retrain`;
     ``force_rebuild`` / ``auto_retrain`` behave exactly as in the flat
     twins. Returns the index snapshot id."""
-    if auto_retrain is not None and not drift_metrics:
-        raise ValueError(
-            "auto_retrain needs drift_metrics=True — without the drift "
-            "record there is no signal to act on"
-        )
     spec = {"src": src_table, "id_col": id_col, "emb_col": emb_col,
             "n_cells": n_cells, "m": m, "n_codes": n_codes,
             "sample_rows": sample_rows, "seed": seed,
             "refine_iters": refine_iters}
-    src_snaps, newest, rebuild, last, idx_snaps, skip = _chain_state(
-        catalog, src_table, index_table, "ivfpq_spec", spec,
-        force=force_rebuild,
+
+    def train(corpus, sample):
+        C = _train_centroids(corpus, sample, n_cells, seed, refine_iters,
+                             emb_col)
+        A = _unit_anchors(C)
+        cn2 = (C * C).sum(1)
+        d2 = ((sample * sample).sum(1)[:, None]
+              - 2.0 * (sample @ C.T) + cn2[None, :])
+        cells = d2.argmin(1)
+        Sn = sample / np.maximum(
+            np.linalg.norm(sample, axis=1, keepdims=True), 1e-300
+        )
+        return C, pq_train(Sn - A[cells], m=m, n_codes=n_codes, seed=seed)
+
+    return _refresh_index(
+        catalog, src_table, index_table, "ivfpq", spec,
+        ("centroids", "ivfpq_books"), train,
+        assign=lambda df, C, books: _ivfpq_assign(df, C, books, id_col,
+                                                  emb_col),
+        row_err=_ivfpq_row_err, sort_by=["cell"],
+        drift_metrics=drift_metrics, force_rebuild=force_rebuild,
+        auto_retrain=auto_retrain,
     )
-    if rebuild or force_rebuild:
-        corpus = _dedup_src(catalog, src_table, id_col, emb_col).persist()
-        try:
-            sample = _training_sample(corpus, id_col, emb_col, sample_rows)
-            if sample.size == 0:
-                raise ValueError(
-                    "refresh_ivfpq_index requires a non-empty source"
-                )
-            C = _lloyd_centroids(sample, n_cells, seed=seed)
-            if refine_iters > 0:
-                C = kmeans_refine(corpus, C, emb_col=emb_col,
-                                  n_iter=refine_iters)
-            A = _unit_anchors(C)
-            cn2 = (C * C).sum(1)
-            d2 = ((sample * sample).sum(1)[:, None]
-                  - 2.0 * (sample @ C.T) + cn2[None, :])
-            cells = d2.argmin(1)
-            Sn = sample / np.maximum(
-                np.linalg.norm(sample, axis=1, keepdims=True), 1e-300
-            )
-            books = pq_train(Sn - A[cells], m=m, n_codes=n_codes,
-                             seed=seed)
-            meta = {"ivfpq_spec": spec, "ivfpq_last_snap": newest,
-                    "centroids": [[float(v) for v in r] for r in C],
-                    "ivfpq_books": books.tolist()}
-            if drift_metrics:
-                q, n = mean_quantization_error(
-                    corpus, emb_col, _ivfpq_row_err(C, books)
-                )
-                meta["ivfpq_drift"] = _drift_meta(q, n, None)
-            return catalog.write(
-                _ivfpq_assign(corpus, C, books, id_col, emb_col),
-                index_table, mode="overwrite", sort_by=["cell"],
-                meta=meta,
-            )
-        finally:
-            corpus.unpersist()
-    if last >= newest:
-        return idx_snaps[-1]["id"]
-    prior_drift = catalog.latest_meta(index_table, "ivfpq_drift")
-    if auto_retrain is not None and prior_drift is None:
-        raise ValueError(
-            "auto_retrain has no baseline on this chain (it predates "
-            "drift metrics) — run once with force_rebuild=True first"
-        )
-    delta = _delta_new_rows(catalog, src_table, index_table, src_snaps, last,
-                            id_col, [id_col, emb_col], skip)
-    if delta is None:
-        return catalog.write(
-            catalog.read(index_table).limit(0), index_table, mode="append",
-            meta={"ivfpq_spec": spec, "ivfpq_last_snap": newest},
-        )
-    delta = delta.persist()
-    try:
-        if delta.count() == 0:
-            return catalog.write(
-                catalog.read(index_table).limit(0), index_table,
-                mode="append",
-                meta={"ivfpq_spec": spec, "ivfpq_last_snap": newest},
-            )
-        C = np.asarray(
-            (catalog.latest_meta(index_table, "centroids") or {})
-            ["centroids"], dtype=np.float64,
-        )
-        books = np.asarray(
-            (catalog.latest_meta(index_table, "ivfpq_books") or {})
-            ["ivfpq_books"], dtype=np.float64,
-        )
-        meta = {"ivfpq_spec": spec, "ivfpq_last_snap": newest}
-        if drift_metrics and prior_drift is not None:
-            q, n = mean_quantization_error(
-                delta, emb_col, _ivfpq_row_err(C, books)
-            )
-            meta["ivfpq_drift"] = _drift_meta(
-                q, n, prior_drift["ivfpq_drift"]["baseline_qerr"]
-            )
-        sid = catalog.write(
-            _ivfpq_assign(delta, C, books, id_col, emb_col), index_table,
-            mode="append", sort_by=["cell"], meta=meta,
-        )
-    finally:
-        delta.unpersist()
-    if auto_retrain is not None and "ivfpq_drift" in meta and needs_retrain(
-        catalog, index_table, threshold=auto_retrain,
-        drift_key="ivfpq_drift",
-    ):
-        return refresh_ivfpq_index(
-            catalog, src_table, index_table, id_col=id_col, emb_col=emb_col,
-            n_cells=n_cells, m=m, n_codes=n_codes, sample_rows=sample_rows,
-            seed=seed, refine_iters=refine_iters,
-            drift_metrics=drift_metrics, force_rebuild=True,
-        )
-    return sid
 
 
 def ivfpq_topk_indexed(

@@ -41,10 +41,7 @@ from lyssandra_spark.operators.dedup import (
     simhash_bands,
 )
 from lyssandra_spark.operators.graph import connected_components
-from lyssandra_spark.sources.catalog import (
-    consumer_needs_rebuild,
-    incremental_chain_start,
-)
+from lyssandra_spark.sources.catalog import Watermark
 
 __all__ = [
     "dedup_new_batch", "simhash_new_batch", "embneardup_new_batch",
@@ -662,10 +659,10 @@ def refresh_aggregate(
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     sum_cols = [sum_cols] if isinstance(sum_cols, str) else list(sum_cols)
-    src_snaps = catalog.snapshots(src_table)
-    if not src_snaps:
-        raise FileNotFoundError(f"no snapshots for source {src_table!r}")
-    newest = src_snaps[-1]["id"]
+    spec = {"src": src_table, "keys": keys, "sum_cols": sum_cols}
+    # a different spec raises: snapshot ids from one table are
+    # meaningless in another's, and another grouping mixes aggregates
+    wm = Watermark(catalog, src_table, agg_table, "agg", spec, role="agg")
 
     def partial(df):
         return df.groupBy(*keys).agg(
@@ -673,65 +670,24 @@ def refresh_aggregate(
             F.count("*").alias(count_col),
         )
 
-    agg_snaps = catalog.snapshots(agg_table)
-    # watermark survives an audit-only compact() of the agg table itself
-    agg_meta = (
-        (catalog.latest_meta(agg_table, "agg_last_snap") or {})
-        if agg_snaps else {}
-    )
-    last = agg_meta.get("agg_last_snap")
-    spec = {"src": src_table, "keys": keys, "sum_cols": sum_cols}
-    # a found-but-different spec is corruption (loud error); NO spec
-    # found means the watermark died at a destructive overwrite (user
-    # reset) — that is the full-rebuild path below, not a mismatch
-    if agg_snaps and agg_meta:
-        head_spec = agg_meta.get("agg_spec")
-        if head_spec != spec:
-            # snapshot ids from one table are meaningless in another's id
-            # space, and a different grouping would fold apples onto
-            # oranges — same loud-mismatch policy as dedup_new_batch's
-            # lsh_params check
-            raise ValueError(
-                f"refresh spec {spec} does not match the agg table's "
-                f"{head_spec} — use a different agg_table or rebuild"
-            )
-    meta = {"agg_spec": spec, "agg_last_snap": newest}
-    # rebuild on: dead/absent watermark, genuine source overwrite, or
-    # an expired-before-folded delta; audit-only compactions land in
-    # ``skip`` so the delta scan (which has no keyed re-ingest guard
-    # and would double-count) never re-reads them (shared
-    # consumer_needs_rebuild rule)
-    needs_rebuild, skip = consumer_needs_rebuild(src_snaps, last)
-    if needs_rebuild:
+    if wm.rebuild:
         # first build, or the source chain was overwritten under us
         return catalog.write(
             partial(catalog.read(src_table)), agg_table,
-            mode="overwrite", meta=meta,
+            mode="overwrite", meta=wm.stamp(),
         )
-    if last >= newest:
-        return agg_snaps[-1]["id"]  # nothing new: no-op
-    delta = None
-    for s in src_snaps:
-        if s["id"] <= last or s["id"] in skip:
-            continue
-        # project to the aggregation inputs: prunes the scan AND makes
-        # the union immune to the add-column schema evolution the
-        # catalog's append guard explicitly permits
-        piece = catalog.read_snapshot(src_table, s["id"]).select(
-            *keys, *sum_cols
-        )
-        delta = piece if delta is None else delta.unionByName(piece)
+    if wm.noop:
+        return wm.snaps[-1]["id"]
+    # audit-only compactions are skipped: this scan has no keyed
+    # re-ingest guard and would double-count them
+    delta = wm.delta([*keys, *sum_cols])
     if delta is None:
-        # everything new was an audit-only compaction: no rows to fold,
-        # advance the watermark only (no data dir)
-        return catalog.write(
-            catalog.read(agg_table).limit(0), agg_table,
-            mode="append", meta=meta,
-        )
+        return wm.advance()  # only audit-only compactions: watermark only
     merged = partial(delta).unionByName(catalog.read(agg_table)).groupBy(
         *keys
     ).agg(
         *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
         F.sum(count_col).alias(count_col),
     )
-    return catalog.write(merged, agg_table, mode="overwrite", meta=meta)
+    return catalog.write(merged, agg_table, mode="overwrite",
+                         meta=wm.stamp())

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from lyssandra_spark.functions.textstats import word_tokens
-from lyssandra_spark.sources.catalog import consumer_needs_rebuild
+from lyssandra_spark.sources.catalog import Watermark
 
 __all__ = [
     "build_postings", "bm25_topk", "bm25_topk_indexed",
@@ -249,33 +249,9 @@ def refresh_postings(
     postings for the re-ingest guard; the corpus text is never re-read.
     """
     spec = {"src": src_table, "id_col": id_col, "text_col": text_col}
-    src_snaps = catalog.snapshots(src_table)
-    if not src_snaps:
-        raise FileNotFoundError(f"no snapshots for source {src_table!r}")
-    newest = src_snaps[-1]["id"]
-    post_snaps = catalog.snapshots(postings_table)
-    # newest snapshot CARRYING the watermark (not necessarily the head:
-    # a compact() of the postings table itself interposes an audit-only
-    # snapshot, and the watermark must survive it)
-    head_meta = (
-        (catalog.latest_meta(postings_table, "postings_spec") or {})
-        if post_snaps else {}
-    )
-    # empty head_meta = the watermark died at a destructive overwrite
-    # (user reset): that takes the full-rebuild path below, not the
-    # spec-mismatch error
-    if post_snaps and head_meta and head_meta.get("postings_spec") != spec:
-        raise ValueError(
-            f"refresh spec {spec} does not match the postings table's "
-            f"{head_meta.get('postings_spec')} — use a different "
-            "postings_table or rebuild"
-        )
-    last = head_meta.get("postings_last_snap")
-    # rebuild on: dead/absent watermark, genuine source overwrite, or
-    # an expired-before-folded delta; audit-only compactions land in
-    # ``skip`` for the delta scan (shared consumer_needs_rebuild rule)
-    needs_rebuild, skip = consumer_needs_rebuild(src_snaps, last)
-    if needs_rebuild:
+    wm = Watermark(catalog, src_table, postings_table, "postings", spec,
+                   role="postings")
+    if wm.rebuild:
         # first build, a source chain overwritten under us, or an
         # expired delta (above). Duplicate-id collapse must be
         # DETERMINISTIC (dropDuplicates keeps a partitioning-dependent
@@ -300,49 +276,27 @@ def refresh_postings(
             # layout skips most of the index per query (no extra
             # shuffle: sortWithinPartitions only)
             sort_by=["term"],
-            meta={"postings_spec": spec, "postings_last_snap": newest,
-                  "n_docs": n_docs},
+            meta=wm.stamp(n_docs=n_docs),
         )
-    if last >= newest:
-        return post_snaps[-1]["id"]  # nothing new: no-op
-    delta = None
-    for s in src_snaps:
-        if s["id"] <= last or s["id"] in skip:
-            continue
-        piece = catalog.read_snapshot(src_table, s["id"]).select(
-            id_col, text_col
-        )
-        delta = piece if delta is None else delta.unionByName(piece)
+    if wm.noop:
+        return wm.snaps[-1]["id"]
+    n_docs = wm.meta["n_docs"]
+    delta = wm.delta([id_col, text_col])
     if delta is None:
-        # everything new was an audit-only compaction: no rows to fold,
-        # advance the watermark only (no data dir)
-        return catalog.write(
-            catalog.read(postings_table).limit(0), postings_table,
-            mode="append",
-            meta={"postings_spec": spec, "postings_last_snap": newest,
-                  "n_docs": head_meta["n_docs"]},
-        )
-    delta = delta.dropDuplicates([id_col])
+        # everything new was an audit-only compaction: watermark only
+        return wm.advance(n_docs=n_docs)
     # re-ingest guard: an id already in the index must not land a second
     # set of tf rows (they would read as doubled term frequencies).
     # Sentinel rows put zero-token ids in this set too, so N is exact.
-    indexed_ids = catalog.read(postings_table).select(id_col).distinct()
-    delta = delta.join(indexed_ids, id_col, "left_anti")
+    delta = wm.unindexed(delta, id_col)
     n_new = delta.count()
     if n_new == 0:
-        # ids all re-ingested: advance the watermark only (no data dir)
-        return catalog.write(
-            catalog.read(postings_table).limit(0), postings_table,
-            mode="append",
-            meta={"postings_spec": spec, "postings_last_snap": newest,
-                  "n_docs": head_meta["n_docs"]},
-        )
+        return wm.advance(n_docs=n_docs)  # ids all re-ingested
     return catalog.write(
         _postings_with_sentinels(delta, id_col, text_col), postings_table,
         mode="append",
         sort_by=["term"],  # per-snapshot term clustering (see rebuild)
-        meta={"postings_spec": spec, "postings_last_snap": newest,
-              "n_docs": head_meta["n_docs"] + n_new},
+        meta=wm.stamp(n_docs=n_docs + n_new),
     )
 
 

@@ -25,11 +25,15 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["ParquetCatalog", "incremental_chain_start", "with_zorder_key"]
+__all__ = [
+    "ParquetCatalog", "Watermark", "incremental_chain_start",
+    "with_zorder_key",
+]
 
 _Z_BUCKETS = 256  # 8 bits per column in the interleaved key
 
@@ -473,11 +477,11 @@ class ParquetCatalog:
         single-snapshot chain is already compact: no-op, returns the
         head id.
 
-        Note for incremental consumers (:func:`refresh_aggregate`-style
-        jobs keyed on ``agg_last_snap``): compaction writes an
-        ``overwrite``, which such jobs correctly detect as a chain reset
-        and handle by recomputing — results stay right, the one refresh
-        after a compaction is just not incremental.
+        Note for incremental consumers (:class:`Watermark`): compaction
+        writes an ``overwrite``, but one that folded only snapshots a
+        consumer already folded is audit-only for it (watermark-only
+        refresh); one that swallowed unfolded snapshots is a chain reset
+        and the consumer recomputes — results stay right either way.
 
         ``zorder_by`` re-CLUSTERS while compacting (``write``'s Z-order
         layout) — the production pairing: hot appends land cheap and
@@ -623,9 +627,13 @@ class ParquetCatalog:
     def latest_meta(self, name: str, key: str) -> dict | None:
         """The meta dict of the most recent snapshot whose meta carries
         ``key`` (newest-first scan — the layout-intent inheritance rule
-        applied to consumer metadata). Watermark-style records
-        (``agg_last_snap``, ``postings_last_snap``, ``lsh_params``)
-        must survive snapshots that don't re-state them: a
+        applied to consumer metadata). Watermark-style records — the
+        ``<kind>_spec`` / ``<kind>_last_snap`` pairs :class:`Watermark`
+        stamps (kinds ``agg``, ``postings``, ``ivf``, ``pq``, ``ivfpq``;
+        postings add ``n_docs``), the index artifacts (``centroids``,
+        ``codebooks``, ``ivfpq_books``) and drift records, and the
+        signature indexes' ``lsh_params`` — must survive snapshots that
+        don't re-state them: a
         :meth:`compact` rewrites the DATA as one overwrite snapshot but
         is not a consumer and carries only its audit meta, so the
         incremental jobs keyed on those watermarks read them through
@@ -693,29 +701,92 @@ def incremental_chain_start(
     return chain_start, skip
 
 
-def consumer_needs_rebuild(
-    snapshots: list[dict], last: int | None
-) -> tuple[bool, set[int]]:
-    """The full freshness decision every incremental consumer
-    (postings, IVF/PQ indexes, materialized aggregates) makes before a
-    refresh: ``(needs_rebuild, skip)``. Shared here so the three
-    consumers cannot drift — this chain/watermark logic has changed
-    twice already (audit-only compactions, expired deltas) and each
-    change must hit all of them identically.
+class Watermark:
+    """One incremental consumer's freshness state against its source
+    chain, and the only code that knows the ``<kind>_spec`` /
+    ``<kind>_last_snap`` meta every watermark consumer (postings, IVF /
+    PQ / IVF-PQ indexes, materialized aggregates) stamps on its table —
+    so the chain/watermark rule, which has changed twice already
+    (audit-only compactions, expired deltas), cannot drift between them.
 
-    Rebuild is needed when (a) there is no watermark (first build, or
-    it died at a destructive overwrite), (b) the watermark predates the
-    consumer-relative chain start (:func:`incremental_chain_start` —
-    a genuine overwrite reset), or (c) some delta snapshot above the
-    watermark was ``expire()``d before this consumer folded it (its
-    rows are still reachable through the cumulative chain read, so the
-    rebuild is lossless — but the incremental path cannot scan it).
-    ``skip`` is the audit-only-compaction set the delta scan must not
-    re-read.
+    Construction raises ``FileNotFoundError`` on a source with no
+    snapshots, and ``ValueError`` (naming ``remedy``) when the table's
+    spec, read via :meth:`ParquetCatalog.latest_meta`, differs from
+    ``spec`` — unless ``force``, whose rebuild replaces the whole table.
+    The comparison is EXACT, so a chain written under other defaults
+    fails loudly instead of mixing artifact generations. No spec found
+    means the watermark died at a destructive overwrite: a rebuild, not
+    a mismatch.
+
+    ``last`` is the newest source snapshot folded (None without a live
+    watermark), ``newest`` the source head, ``skip`` the audit-only
+    compactions the delta scan must not re-read
+    (:func:`incremental_chain_start`). ``rebuild`` is set by ``force``,
+    by a missing watermark, by a watermark older than the
+    consumer-relative chain start (a genuine overwrite reset), or by a
+    delta snapshot above it that was ``expire()``d before it was folded
+    (the cumulative chain still serves its rows, so the rebuild is
+    lossless; the incremental scan cannot). ``noop``: nothing new, the
+    consumer returns its head snapshot id and writes nothing.
     """
-    chain_start, skip = incremental_chain_start(snapshots, last)
-    delta_expired = last is not None and any(
-        s["id"] > last and s.get("expired") and s["id"] not in skip
-        for s in snapshots
-    )
-    return (last is None or last < chain_start or delta_expired), skip
+
+    def __init__(self, catalog: ParquetCatalog, src_table: str,
+                 table: str, kind: str, spec: dict, role: str,
+                 remedy: str = "rebuild", force: bool = False):
+        self.src_snaps = catalog.snapshots(src_table)
+        if not self.src_snaps:
+            raise FileNotFoundError(f"no snapshots for source {src_table!r}")
+        self.catalog, self.src_table, self.table = catalog, src_table, table
+        self.spec_key, self.last_key = f"{kind}_spec", f"{kind}_last_snap"
+        self.spec = spec
+        self.newest = self.src_snaps[-1]["id"]
+        self.snaps = catalog.snapshots(table)
+        self.meta = (
+            (catalog.latest_meta(table, self.spec_key) or {})
+            if self.snaps else {}
+        )
+        if self.meta and self.meta[self.spec_key] != spec and not force:
+            raise ValueError(
+                f"refresh spec {spec} does not match the {role} table's "
+                f"{self.meta[self.spec_key]} — use a different "
+                f"{role}_table or {remedy}"
+            )
+        last = self.last = self.meta.get(self.last_key)
+        chain_start, self.skip = incremental_chain_start(self.src_snaps, last)
+        delta_expired = last is not None and any(
+            s["id"] > last and s.get("expired") and s["id"] not in self.skip
+            for s in self.src_snaps
+        )
+        self.rebuild = (force or last is None or last < chain_start
+                        or delta_expired)
+        self.noop = not self.rebuild and last >= self.newest
+
+    def stamp(self, **extra) -> dict:
+        """The meta of a snapshot that folds the source up to ``newest``."""
+        return {self.spec_key: self.spec, self.last_key: self.newest, **extra}
+
+    def delta(self, cols: list[str]) -> DataFrame | None:
+        """Union of the source snapshots above the watermark minus
+        ``skip``, each projected to ``cols`` (prunes the scan and keeps
+        the union immune to add-column evolution); None if none."""
+        pieces = [
+            self.catalog.read_snapshot(self.src_table, s["id"]).select(*cols)
+            for s in self.src_snaps
+            if s["id"] > self.last and s["id"] not in self.skip
+        ]
+        return reduce(DataFrame.unionByName, pieces) if pieces else None
+
+    def unindexed(self, delta: DataFrame, id_col: str) -> DataFrame:
+        """Re-ingest guard of the id-keyed consumers: collapse duplicate
+        ids and anti-join the ids already in the table (the id IS the
+        identity, so a re-fed row never lands twice)."""
+        indexed = self.catalog.read(self.table).select(id_col).distinct()
+        return delta.dropDuplicates([id_col]).join(indexed, id_col,
+                                                   "left_anti")
+
+    def advance(self, **extra) -> int:
+        """Append a watermark-only snapshot (no rows) and return its id."""
+        return self.catalog.write(
+            self.catalog.read(self.table).limit(0), self.table,
+            mode="append", meta=self.stamp(**extra),
+        )

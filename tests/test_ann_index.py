@@ -4,6 +4,7 @@ incremental delta assignment must equal a full rebuild when the trained
 artifacts coincide, and the serving plans must never re-scan or
 re-train over the corpus."""
 
+import json
 import re
 
 import numpy as np
@@ -16,6 +17,7 @@ from lyssandra_spark.operators.ann_index import (
     ivf_topk_indexed,
     pq_topk_indexed,
     refresh_ivf_index,
+    refresh_ivfpq_index,
     refresh_pq_index,
 )
 from lyssandra_spark.sources.catalog import ParquetCatalog
@@ -252,63 +254,93 @@ def test_ivf_missing_index_raises(spark, emb, tmp_path):
         ivf_topk_indexed(cat, "nope_" + "t", emb.limit(1))
 
 
-def test_ann_index_survives_audit_compaction(spark, emb, tmp_path):
-    """compact()+expire() of already-indexed source snapshots must not
-    retrain or reassign: the refresh is watermark-only (append), the
-    frozen centroids/codebooks survive, and a later delta still folds
-    incrementally. Covers both IVF and PQ (shared chain-state path,
-    separate delta-None branches)."""
+# per kind: refresh, its kwargs (refine_iters=0: the final assertion
+# compares against a one-shot rebuild over the FULL corpus, which
+# refinement would train on a different row population than the frozen
+# bootstrap artifacts), artifact meta keys, assignment columns
+_ANN_KINDS = {
+    "ivf": (refresh_ivf_index,
+            dict(n_cells=8, sample_rows=64, seed=23, refine_iters=0),
+            ("centroids",), ["cell"]),
+    "pq": (refresh_pq_index,
+           dict(m=8, n_codes=16, sample_rows=64, seed=29, refine_iters=0),
+           ("codebooks",), ["code"]),
+    "ivfpq": (refresh_ivfpq_index,
+              dict(n_cells=8, m=8, n_codes=16, sample_rows=64, seed=31,
+                   refine_iters=0),
+              ("centroids", "ivfpq_books"), ["cell", "code"]),
+}
+
+
+@pytest.mark.parametrize("kind", list(_ANN_KINDS))
+def test_ann_index_survives_audit_compaction(spark, emb, tmp_path, kind):
+    """Every branch of the shared refresh state machine, per index kind:
+    a no-op refresh writes nothing; re-ingesting already-indexed ids and
+    compact()+expire() of already-indexed source snapshots are
+    watermark-only appends (no retrain, no reassignment, frozen
+    artifacts byte-equal); a later delta still folds incrementally and
+    the index equals a one-shot rebuild."""
+    refresh, kw, art_keys, assigned = _ANN_KINDS[kind]
     ranked = _hash_ranked_ids(emb)
     b1a = emb.where(F.col("vec_id").isin(ranked[:150]))
     b1b = emb.where(F.col("vec_id").isin(ranked[150:250]))
     b2 = emb.where(~F.col("vec_id").isin(ranked[:250]))
-    # refine_iters=0: the final assertion compares against a one-shot
-    # rebuild over the FULL corpus, which refinement would train on a
-    # different row population than the frozen bootstrap artifacts
-    ivf_kw = dict(n_cells=8, sample_rows=64, seed=23, refine_iters=0)
-    pq_kw = dict(m=8, n_codes=16, sample_rows=64, seed=29, refine_iters=0)
+
+    def artifacts(table):
+        return [json.dumps(cat.latest_meta(table, k)[k]) for k in art_keys]
+
+    def assignments(table):
+        df = (
+            cat.read(table).select("vec_id", *assigned).toPandas()
+            .sort_values("vec_id").reset_index(drop=True)
+        )
+        if "code" in df:
+            df["code"] = df["code"].map(tuple)  # arrays compare by value
+        return df
+
+    def watermark_only():
+        head = cat.snapshots("idx")[-1]
+        assert head["mode"] == "append"
+        assert set(head["meta"]) == {f"{kind}_spec", f"{kind}_last_snap"}
 
     cat = ParquetCatalog(spark, str(tmp_path))
     cat.write(b1a, "vecs", mode="overwrite")
     cat.write(b1b, "vecs", mode="append")  # a real chain, so compact() rewrites
-    s1 = refresh_ivf_index(cat, "vecs", "ivf", **ivf_kw)
-    refresh_pq_index(cat, "vecs", "pq", **pq_kw)
-    c_before = cat.latest_meta("ivf", "centroids")["centroids"]
-    books_before = cat.latest_meta("pq", "codebooks")["codebooks"]
+    s1 = refresh(cat, "vecs", "idx", **kw)
+    before = artifacts("idx")
+
+    # no new source snapshot: the head id comes back, nothing is written
+    n_snaps = len(cat.snapshots("idx"))
+    assert refresh(cat, "vecs", "idx", **kw) == s1
+    assert len(cat.snapshots("idx")) == n_snaps
+
+    # wholesale re-ingest of indexed ids: watermark advances, no dup rows
+    cat.write(b1a, "vecs", mode="append")
+    s2 = refresh(cat, "vecs", "idx", **kw)
+    assert s2 > s1
+    watermark_only()
+    assert cat.read("idx").count() == 250
 
     cat.compact("vecs")
     cat.expire("vecs")
-    s2 = refresh_ivf_index(cat, "vecs", "ivf", **ivf_kw)
-    assert s2 > s1
-    assert cat.snapshots("ivf")[-1]["mode"] == "append"  # no rebuild
-    refresh_pq_index(cat, "vecs", "pq", **pq_kw)
-    assert cat.snapshots("pq")[-1]["mode"] == "append"
-    assert cat.read("ivf").count() == 250
-    assert cat.read("pq").count() == 250
+    s3 = refresh(cat, "vecs", "idx", **kw)
+    assert s3 > s2
+    watermark_only()  # no rebuild
+    assert cat.read("idx").count() == 250
+    assert artifacts("idx") == before
 
     # post-compaction delta folds under the FROZEN artifacts
     cat.write(b2, "vecs", mode="append")
-    refresh_ivf_index(cat, "vecs", "ivf", **ivf_kw)
-    refresh_pq_index(cat, "vecs", "pq", **pq_kw)
-    assert cat.snapshots("ivf")[-1]["mode"] == "append"
-    assert cat.snapshots("pq")[-1]["mode"] == "append"
-    assert cat.latest_meta("ivf", "centroids")["centroids"] == c_before
-    assert cat.latest_meta("pq", "codebooks")["codebooks"] == books_before
-    assert cat.read("ivf").count() == 500
-    assert cat.read("pq").count() == 500
+    refresh(cat, "vecs", "idx", **kw)
+    assert cat.snapshots("idx")[-1]["mode"] == "append"
+    assert artifacts("idx") == before
+    assert cat.read("idx").count() == 500
 
     # and the index still equals a one-shot rebuild over the full corpus
     cat.write(emb, "vecs_full", mode="overwrite")
-    refresh_ivf_index(cat, "vecs_full", "ivf_full", **ivf_kw)
-    gi = (
-        cat.read("ivf").select("vec_id", "cell").toPandas()
-        .sort_values("vec_id").reset_index(drop=True)
-    )
-    gf = (
-        cat.read("ivf_full").select("vec_id", "cell").toPandas()
-        .sort_values("vec_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(gi, gf)
+    refresh(cat, "vecs_full", "idx_full", **kw)
+    assert artifacts("idx_full") == before
+    pd.testing.assert_frame_equal(assignments("idx"), assignments("idx_full"))
 
 
 # ------------------------------------------------- round-8: sample bias,

@@ -656,6 +656,98 @@ def test_incremental_chain_start_pure():
     assert incremental_chain_start(snaps, 6) == (7, {4, 6})
 
 
+def _refresh_consumer(name, cat):
+    """Refresh one of the five watermark consumers of table ``src``
+    into table ``name`` with small fixed parameters."""
+    from lyssandra_spark.operators import ann_index, incremental, search
+
+    ann = dict(sample_rows=32, refine_iters=0)
+    return {
+        "ivf": lambda: ann_index.refresh_ivf_index(
+            cat, "src", "ivf", n_cells=4, **ann),
+        "pq": lambda: ann_index.refresh_pq_index(
+            cat, "src", "pq", m=2, n_codes=4, **ann),
+        "ivfpq": lambda: ann_index.refresh_ivfpq_index(
+            cat, "src", "ivfpq", n_cells=4, m=2, n_codes=4, **ann),
+        "postings": lambda: search.refresh_postings(
+            cat, "src", "postings", id_col="vec_id"),
+        "agg": lambda: incremental.refresh_aggregate(
+            cat, "src", "agg", "grp", ["x"]),
+    }[name]()
+
+
+# per consumer: (spec, [(mode, meta keys) of the rebuild, delta and
+# watermark-only snapshots]) — the manifest format chains already on
+# disk were written in, so they keep refreshing without force_rebuild
+_EMB = {"src": "src", "id_col": "vec_id", "emb_col": "embedding"}
+_MANIFEST_FORMAT = {
+    "ivf": (
+        {**_EMB, "n_cells": 4, "sample_rows": 32, "seed": 23,
+         "refine_iters": 0},
+        [("overwrite", {"ivf_spec", "ivf_last_snap", "centroids",
+                        "ivf_drift"}),
+         ("append", {"ivf_spec", "ivf_last_snap", "ivf_drift"}),
+         ("append", {"ivf_spec", "ivf_last_snap"})],
+    ),
+    "pq": (
+        {**_EMB, "m": 2, "n_codes": 4, "sample_rows": 32, "seed": 29,
+         "refine_iters": 0},
+        [("overwrite", {"pq_spec", "pq_last_snap", "codebooks",
+                        "pq_drift"}),
+         ("append", {"pq_spec", "pq_last_snap", "pq_drift"}),
+         ("append", {"pq_spec", "pq_last_snap"})],
+    ),
+    "ivfpq": (
+        {**_EMB, "n_cells": 4, "m": 2, "n_codes": 4, "sample_rows": 32,
+         "seed": 31, "refine_iters": 0},
+        [("overwrite", {"ivfpq_spec", "ivfpq_last_snap", "centroids",
+                        "ivfpq_books", "ivfpq_drift"}),
+         ("append", {"ivfpq_spec", "ivfpq_last_snap", "ivfpq_drift"}),
+         ("append", {"ivfpq_spec", "ivfpq_last_snap"})],
+    ),
+    "postings": (
+        {"src": "src", "id_col": "vec_id", "text_col": "text"},
+        [(mode, {"postings_spec", "postings_last_snap", "n_docs"})
+         for mode in ("overwrite", "append", "append")],
+    ),
+    "agg": (
+        {"src": "src", "keys": ["grp"], "sum_cols": ["x"]},
+        [(mode, {"agg_spec", "agg_last_snap"})
+         for mode in ("overwrite", "overwrite", "append")],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_MANIFEST_FORMAT))
+def test_consumer_manifest_format(spark, cat, name):
+    """Rebuild, delta and watermark-only (audit-only source compaction)
+    snapshots of each watermark consumer carry exactly the meta keys,
+    spec and watermark values of the established manifest format."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(40, 8))
+    words = ["ant", "bee", "cat", "dog", "eel"]
+    src = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]], " ".join(rng.choice(words, 3)),
+          i % 3, float(X[i, 0])) for i in range(40)],
+        "vec_id long, embedding array<double>, text string, grp int, "
+        "x double",
+    )
+    cat.write(src.where("vec_id < 20"), "src", mode="overwrite")
+    _refresh_consumer(name, cat)
+    cat.write(src.where("vec_id >= 20"), "src", mode="append")
+    _refresh_consumer(name, cat)
+    cat.compact("src")
+    _refresh_consumer(name, cat)
+
+    spec, want = _MANIFEST_FORMAT[name]
+    snaps = cat.snapshots(name)  # each table is named after its kind
+    assert [(s["mode"], set(s["meta"])) for s in snaps] == want
+    assert [s["meta"][f"{name}_spec"] for s in snaps] == [spec] * 3
+    assert [s["meta"][f"{name}_last_snap"] for s in snaps] == [1, 2, 3]
+
+
 def test_refresh_aggregate_survives_audit_compaction(spark, cat):
     """The weekly compact()+expire() housekeeping cadence must not force
     incremental consumers into full rebuilds: a compaction of
