@@ -11,6 +11,13 @@ workload's pair list (``perfbench.gen`` documents, seed 1), once as
 ``minhash_lsh_pairs`` produces it and once round-robined to 8 partitions,
 and prints each layout's median, quartiles and Spark job count per rep.
 
+``lsh`` times ``minhash_lsh_pairs`` (the ``curation`` workload's
+parameters) over ``exact_dedup`` of a 2,500-doc ``perfbench.gen``
+corpus (seed 1), and prints the median, quartiles and Spark job count
+per rep, plus how many rows a Python pass between ``exact_dedup`` and
+``minhash_lsh_pairs`` reads per document in one call (an accumulator;
+1.0 when the signature pass runs once per document).
+
 ``refresh`` walks the five watermark consumers (``refresh_ivf_index``,
 ``refresh_pq_index``, ``refresh_ivfpq_index``, ``refresh_postings``,
 ``refresh_aggregate``) over one small synthetic source chain through
@@ -18,7 +25,7 @@ rebuild -> no-op -> re-ingest -> compact+expire -> delta, and prints per
 (consumer, branch) the Spark job count, the mode of the consumer table's
 newest snapshot and the wall time.
 
-Usage: python bench_extra.py [encode|queries|all|cc|refresh]
+Usage: python bench_extra.py [encode|queries|all|cc|lsh|refresh]
 """
 
 from __future__ import annotations
@@ -89,6 +96,53 @@ def cc_bench(reps: int = 7, seed: int = 1) -> None:
     spark.stop()
     print(json.dumps({"metric": "connected_components on the curation pairs",
                       "unit": "sec", "reps": reps, "cores": CPUS, **out}))
+
+
+def lsh_bench(reps: int = 7, seed: int = 1) -> None:
+    import statistics
+    import tempfile
+
+    from perfbench import gen
+    from perfbench.workloads import Curation
+
+    from lyssandra_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
+    from lyssandra_spark.session import get_spark
+
+    spark = get_spark(app="lyssandra-bench-lsh", cores=CPUS)
+    sc = spark.sparkContext
+    with tempfile.TemporaryDirectory() as d:
+        gen.write(gen.documents(seed, Curation.N_DOCS), d)
+        scan = spark.read.parquet(d)
+        times, jobs = [], set()
+        for r in range(reps + 1):  # rep 0 warms up, untimed
+            group = f"lsh:{r}"
+            sc.setJobGroup(group, "bench_extra lsh")
+            t0 = time.perf_counter()
+            _force(minhash_lsh_pairs(exact_dedup(scan), **Curation.DEDUP))
+            if r:
+                times.append(time.perf_counter() - t0)
+                jobs.add(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setJobGroup("lsh:count", "bench_extra lsh upstream reads")
+        seen = sc.accumulator(0)
+
+        def counted(it):
+            for b in it:
+                seen.add(b.num_rows)
+                yield b
+
+        docs = exact_dedup(scan)
+        pairs = minhash_lsh_pairs(
+            docs.mapInArrow(counted, docs.schema), **Curation.DEDUP)
+        n_pairs = len(pairs.collect())
+        n_docs = docs.count()
+    spark.stop()
+    q1, med, q3 = statistics.quantiles(times, n=4)
+    print(json.dumps({
+        "metric": "minhash_lsh_pairs on the curation corpus", "unit": "sec",
+        "reps": reps, "cores": CPUS, "docs": n_docs, "pairs": n_pairs,
+        "median_s": round(med, 3), "q1_s": round(q1, 3), "q3_s": round(q3, 3),
+        "jobs": sorted(jobs), "upstream_reads_per_doc": round(seen.value / n_docs, 3),
+    }))
 
 
 def refresh_bench(n_rows: int = 600, dim: int = 16, seed: int = 1) -> None:
@@ -164,6 +218,8 @@ def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "all"
     if mode == "cc":
         return cc_bench()
+    if mode == "lsh":
+        return lsh_bench()
     if mode == "refresh":
         return refresh_bench()
     from pyspark.sql import functions as F

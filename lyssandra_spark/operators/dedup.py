@@ -625,6 +625,18 @@ def _dedup_window_spans(
     return hit.unionByName(miss)
 
 
+def _text_buffer(tarr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(data, offsets) bytes of a string column: the zero-copy Arrow view
+    when there is one, else the UTF-8 encoding with nulls as ""."""
+    buf = arrow_string_buffer(tarr)
+    if buf is not None:
+        return buf
+    enc = [("" if t is None else t).encode() for t in tarr.to_pylist()]
+    off = np.zeros(len(enc) + 1, np.int64)
+    np.cumsum([len(e) for e in enc], out=off[1:])
+    return np.frombuffer(b"".join(enc), np.uint8), off
+
+
 def _minhash_params(n_perm: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.default_rng(seed)
     a = rng.integers(1, (1 << 61) - 1, size=n_perm, dtype=np.uint64)
@@ -632,17 +644,24 @@ def _minhash_params(n_perm: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]
     return a, b
 
 
-def _sig_block(texts_buf, n_perm: int, ngram_bytes: int, seed: int) -> np.ndarray:
-    """(n, n_perm) uint64 minhash signatures from a (data, offsets) buffer."""
+def _doc_windows(texts_buf, ngram_bytes: int):
+    """Char-ngram window hashes of a (data, offsets) buffer, grouped by doc.
+
+    Returns ``(h, seg_starts, doc_ids)``: the uint64 rolling hash (same as
+    the embedder's, over ASCII-lowercased bytes) of every window that lies
+    wholly inside one doc, in doc order; the start of each doc's run in
+    ``h``; and that doc's row. Docs with no whole window have no run; all
+    three are empty when no doc has one. Per-doc reductions are then one
+    ``ufunc.reduceat(x, seg_starts)`` over contiguous runs — measured ~6x
+    faster than the unbuffered element-at-a-time ``ufunc.at`` scatter.
+    """
     data, offsets = texts_buf
     n = len(offsets) - 1
-    a, b = _minhash_params(n_perm, seed)
-    out = np.full((n, n_perm), np.iinfo(np.uint64).max, dtype=np.uint64)
     data = np.asarray(data, dtype=np.uint8)[offsets[0] : offsets[-1]]
     offsets = np.asarray(offsets, dtype=np.int64) - offsets[0]
+    empty = np.empty(0, np.uint64), np.empty(0, np.int64), np.empty(0, np.int64)
     if len(data) < ngram_bytes:
-        return out
-    # char-ngram shingle hashes (same rolling hash as the embedder)
+        return empty
     low = data.copy()
     mask = (low >= 65) & (low <= 90)
     low[mask] += 32
@@ -654,16 +673,21 @@ def _sig_block(texts_buf, n_perm: int, ngram_bytes: int, seed: int) -> np.ndarra
     h = h[valid]
     tid = tid[valid]
     if len(h) == 0:
+        return empty
+    seg_starts = np.concatenate(([0], np.nonzero(np.diff(tid))[0] + 1))
+    return h, seg_starts, tid[seg_starts]
+
+
+def _sig_block(texts_buf, n_perm: int, ngram_bytes: int, seed: int) -> np.ndarray:
+    """(n, n_perm) uint64 minhash signatures from a (data, offsets) buffer.
+
+    Docs with no whole window keep the uint64-max sentinel."""
+    n = len(texts_buf[1]) - 1
+    a, b = _minhash_params(n_perm, seed)
+    out = np.full((n, n_perm), np.iinfo(np.uint64).max, dtype=np.uint64)
+    h, seg_starts, doc_ids = _doc_windows(texts_buf, ngram_bytes)
+    if len(h) == 0:
         return out
-    # Per-doc segment boundaries, computed ONCE: tid is sorted (windows
-    # arrive in doc order), so the per-doc min is a minimum.reduceat over
-    # contiguous segments — measured ~6x faster than the unbuffered
-    # element-at-a-time np.minimum.at scatter it replaces, with identical
-    # results (docs with zero windows keep the uint64-max sentinel).
-    seg_starts = np.concatenate(
-        ([0], np.nonzero(np.diff(tid))[0] + 1)
-    )
-    doc_ids = tid[seg_starts]
     x = np.empty_like(h)
     f = np.empty_like(h)
     M = np.uint64(_MERSENNE)
@@ -692,7 +716,6 @@ def minhash_signatures(
     seed: int = 7,
 ) -> DataFrame:
     """Append `sig: array<long>` minhash signatures (vectorized mapInArrow)."""
-    in_names = df.select(id_col, text_col).schema.fieldNames()
     out_schema = T.StructType(
         [df.schema[id_col], T.StructField("sig", T.ArrayType(T.LongType()), False)]
     )
@@ -702,15 +725,9 @@ def minhash_signatures(
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            tarr = batch.column(1)
-            buf = arrow_string_buffer(tarr)
-            if buf is None:
-                texts = ["" if t is None else t for t in tarr.to_pylist()]
-                enc = [t.encode() for t in texts]
-                off = np.zeros(len(enc) + 1, np.int64)
-                np.cumsum([len(e) for e in enc], out=off[1:])
-                buf = (np.frombuffer(b"".join(enc), np.uint8), off)
-            sig = _sig_block(buf, n_perm, ngram_bytes, seed).astype(np.int64)
+            sig = _sig_block(
+                _text_buffer(batch.column(1)), n_perm, ngram_bytes, seed
+            ).astype(np.int64)
             offs = pa.array(
                 np.arange(0, (batch.num_rows + 1) * n_perm, n_perm, dtype=np.int32)
             )
@@ -806,13 +823,26 @@ def minhash_lsh_pairs(
             "remainder would silently exclude the trailing minhash values "
             "from every band while est_jaccard still divides by n_perm"
         )
-    sigs = minhash_signatures(df, id_col, text_col, n_perm, ngram_bytes, seed)
+    # One keyed exchange over the signature pass, read by the band
+    # self-join and both verification joins: AQE materializes it once and
+    # reuses it. Spark reuses exchanges but never a Python subplan, so
+    # without it each read re-ran the pass and its input (3 passes of
+    # ~0.6 s each per call on 2,500 docs). By column with no count, so AQE
+    # can coalesce it: a fixed count hands the pairs to
+    # connected_components in that many partitions and costs its
+    # zero-round exit. Under sort-merge joins the verification joins read
+    # it as is (already partitioned by id). No cache: nothing outlives the
+    # call. A cached input (``df.cache()``) defeats the reuse: the joins
+    # re-instance its in-memory relation and AQE does not match the
+    # copies, so there the pass still runs once per read (4 per doc).
+    sigs = minhash_signatures(
+        df, id_col, text_col, n_perm, ngram_bytes, seed
+    ).repartition(id_col)
     # Candidate generation explodes ONLY (id, band, bh): carrying the full
     # sig array (n_perm x 8 B) through the banded self-join would multiply
     # the shuffle width by bands x n_perm at 10^12 docs. Signatures are
     # re-joined below for surviving pairs only (2 narrow keyed joins beat
-    # a bands-x-wider exchange; the signature mapInArrow pass is cheap to
-    # recompute relative to the shuffle it avoids).
+    # a bands-x-wider exchange).
     # xxhash64 hashes the array column directly — the earlier
     # to_json(struct(...)) round-trip built a JSON string per (row, band)
     # purely to feed the hash; equal slices hash equal either way (so true
@@ -885,6 +915,33 @@ def shingle_set(toks_col: str = "toks", n: int = 3):
     )
 
 
+def _simhash_block(texts_buf, ngram_bytes: int) -> np.ndarray:
+    """(n,) uint64 SimHashes from a (data, offsets) buffer.
+
+    Bit b of a doc's hash is set iff more of its char-ngram window hashes
+    have bit b set than clear (sum of +-1 over windows > 0, i.e.
+    2 * ones > count). Docs with no whole window hash to 0. The per-bit
+    counts are segment sums over the doc's windows, so the working set is
+    O(windows); a (windows x 64) int64 +-1 matrix scattered with
+    ``np.add.at`` took ~6 GB and 4-7x the time on one 8,192-row batch of
+    ~700 B texts (bit-identical results, pinned by a test).
+    """
+    val = np.zeros(len(texts_buf[1]) - 1, dtype=np.uint64)
+    h32, seg_starts, doc_ids = _doc_windows(texts_buf, ngram_bytes)
+    if len(h32) == 0:
+        return val
+    # widen to 64 bits deterministically
+    h64 = (h32 * np.uint64(0x9E3779B97F4A7C15)) ^ (h32 << np.uint64(32))
+    count = np.diff(np.append(seg_starts, len(h64)))
+    bit = np.empty_like(h64)
+    for b in range(64):
+        np.right_shift(h64, np.uint64(b), out=bit)
+        np.bitwise_and(bit, np.uint64(1), out=bit)
+        ones = np.add.reduceat(bit, seg_starts).astype(np.int64)
+        val[doc_ids] |= (2 * ones > count).astype(np.uint64) << np.uint64(b)
+    return val
+
+
 def simhash(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     ngram_bytes: int = 4,
@@ -903,43 +960,7 @@ def simhash(
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            tarr = batch.column(1)
-            buf = arrow_string_buffer(tarr)
-            if buf is None:
-                texts = ["" if t is None else t for t in tarr.to_pylist()]
-                enc = [t.encode() for t in texts]
-                off = np.zeros(len(enc) + 1, np.int64)
-                np.cumsum([len(e) for e in enc], out=off[1:])
-                buf = (np.frombuffer(b"".join(enc), np.uint8), off)
-            data, offsets = buf
-            n = batch.num_rows
-            data = np.asarray(data, np.uint8)[offsets[0] : offsets[-1]]
-            offsets = np.asarray(offsets, np.int64) - offsets[0]
-            acc = np.zeros((n, 64), dtype=np.int64)
-            if len(data) >= ngram_bytes:
-                low = data.copy()
-                mask = (low >= 65) & (low <= 90)
-                low[mask] += 32
-                h32 = rolling_hashes(low, ngram_bytes)
-                # widen to 64 bits deterministically
-                h64 = (
-                    h32.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-                ) ^ (h32.astype(np.uint64) << np.uint64(32))
-                nwin = len(h64)
-                byte_tid = np.repeat(np.arange(n, dtype=np.int64), np.diff(offsets))
-                tid = byte_tid[:nwin]
-                valid = tid == byte_tid[ngram_bytes - 1 : ngram_bytes - 1 + nwin]
-                h64 = h64[valid]
-                tid = tid[valid]
-                bits = (
-                    (h64[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-                    & np.uint64(1)
-                ).astype(np.int64) * 2 - 1
-                np.add.at(acc, tid, bits)
-            sh = (acc > 0).astype(np.uint64)
-            val = np.zeros(n, dtype=np.uint64)
-            for bit in range(64):
-                val |= sh[:, bit] << np.uint64(bit)
+            val = _simhash_block(_text_buffer(batch.column(1)), ngram_bytes)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), pa.array(val.view(np.int64), pa.int64())],
                 names=[id_col, "simhash"],

@@ -174,6 +174,162 @@ def test_simhash_properties(spark, docs):
     assert np.mean(rand) > 20
 
 
+def _simhash_add_at(texts, ngram_bytes=4):
+    """The original SimHash formula, kept as the oracle: a (windows x 64)
+    +-1 matrix scattered per doc with np.add.at, then sign > 0."""
+    from lyssandra_spark.functions.embed import rolling_hashes
+
+    enc = [("" if t is None else t).encode() for t in texts]
+    data = np.frombuffer(b"".join(enc), np.uint8)
+    offsets = np.concatenate(([0], np.cumsum([len(e) for e in enc]))).astype(np.int64)
+    n = len(enc)
+    acc = np.zeros((n, 64), dtype=np.int64)
+    if len(data) >= ngram_bytes:
+        low = data.copy()
+        mask = (low >= 65) & (low <= 90)
+        low[mask] += 32
+        h32 = rolling_hashes(low, ngram_bytes)
+        h64 = (h32.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ (
+            h32.astype(np.uint64) << np.uint64(32)
+        )
+        nwin = len(h64)
+        byte_tid = np.repeat(np.arange(n, dtype=np.int64), np.diff(offsets))
+        tid = byte_tid[:nwin]
+        valid = tid == byte_tid[ngram_bytes - 1 : ngram_bytes - 1 + nwin]
+        bits = (
+            (h64[valid][:, None] >> np.arange(64, dtype=np.uint64)[None, :])
+            & np.uint64(1)
+        ).astype(np.int64) * 2 - 1
+        np.add.at(acc, tid[valid], bits)
+    sh = (acc > 0).astype(np.uint64)
+    val = np.zeros(n, dtype=np.uint64)
+    for bit in range(64):
+        val |= sh[:, bit] << np.uint64(bit)
+    return val.view(np.int64)
+
+
+def test_simhash_segment_sums_match_add_at_oracle(spark):
+    """The per-bit segment-sum kernel is bit-identical to the +-1 matrix
+    formula it replaced, on empty, shorter-than-ngram, null, non-ASCII and
+    mixed-case texts, directly and through Spark at two Arrow batch sizes
+    (a batch holding the null takes the python-strings path, the others
+    the zero-copy one)."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(5)
+    texts = [
+        "", "abc", None, "héllo wörld ✓ naïve café", "ABCD", "x" * 4,
+        "Ünïcödé — 日本語のテキスト", " ", None, "ab\ncd",
+    ] + [
+        "".join(chr(c) for c in rng.integers(32, 127, rng.integers(0, 300)))
+        for _ in range(40)
+    ]
+    want = _simhash_add_at(texts)
+    arr = pa.array(texts, pa.string())
+    got = DD._simhash_block(DD._text_buffer(arr), 4).view(np.int64)
+    assert np.array_equal(got, want)
+    # a sliced array (non-zero Arrow offset) of null-free texts
+    tail = arr.slice(11)
+    got = DD._simhash_block(DD._text_buffer(tail), 4).view(np.int64)
+    assert np.array_equal(got, want[11:])
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    try:
+        for batch in ("3", "8192"):
+            spark.conf.set(key, batch)
+            out = DD.simhash(df).toPandas().sort_values("doc_id")
+            assert out.doc_id.tolist() == list(range(len(texts)))
+            assert np.array_equal(out.simhash.to_numpy(np.int64), want), batch
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _neardup_corpus(seed=1, n=600):
+    """600 docs shaped like a curation corpus: 30% links of 6-doc
+    near-duplicate chains (each link rewrites 6% of the previous link's
+    Zipf-drawn words), 10% exact copies, the rest unique; ids permuted."""
+    rng = np.random.default_rng(seed)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = np.array(sorted({
+        "".join(rng.choice(letters, rng.integers(2, 10))) for _ in range(3000)
+    }), dtype=object)
+    p = 1.0 / np.arange(1, len(vocab) + 1) ** 1.1
+    p /= p.sum()
+
+    def words(k):
+        return list(vocab[rng.choice(len(vocab), k, p=p)])
+
+    texts = []
+    for _ in range(int(n * 0.3) // 6):
+        w = words(int(rng.integers(60, 160)))
+        for _ in range(6):
+            texts.append(" ".join(w))
+            w = list(w)
+            for i in rng.choice(len(w), max(1, int(0.06 * len(w))), replace=False):
+                w[i] = words(1)[0]
+    n_copy = int(n * 0.1)
+    while len(texts) < n - n_copy:
+        texts.append(" ".join(words(int(rng.integers(60, 160)))))
+    texts += [texts[i] for i in rng.integers(0, len(texts), n_copy)]
+    ids = rng.permutation(n).astype(np.int64) + 1
+    return pd.DataFrame({"doc_id": ids, "text": texts})
+
+
+@pytest.fixture(scope="module")
+def lsh_corpus():
+    """The corpus and its banded-LSH pair set by brute force: a pair
+    qualifies iff some band's 4 minhashes agree in full and at least half
+    of all 32 agree (band equality stands in for the xxhash64 bucket)."""
+    pdf = _neardup_corpus()
+    texts = pdf.text.tolist()
+    enc = [t.encode() for t in texts]
+    off = np.concatenate(([0], np.cumsum([len(e) for e in enc]))).astype(np.int64)
+    sig = DD._sig_block((np.frombuffer(b"".join(enc), np.uint8), off), 32, 8, 7)
+    eq = sig[:, None, :] == sig[None, :, :]
+    banded = eq.reshape(len(sig), len(sig), 8, 4).all(axis=3).any(axis=2)
+    hit = banded & (eq.mean(axis=2) >= 0.5)
+    ids = pdf.doc_id.to_numpy()
+    pairs = {
+        (int(min(ids[i], ids[j])), int(max(ids[i], ids[j])))
+        for i, j in zip(*np.nonzero(np.triu(hit, 1)))
+    }
+    return pdf, pairs
+
+
+@pytest.mark.parametrize("n_parts", [1, 3, 8])
+def test_minhash_lsh_pairs_one_signature_pass_per_doc(spark, lsh_corpus, n_parts):
+    """The band self-join and both verification joins read ONE shuffle of
+    the signatures, so an upstream Python pass sees each document once per
+    collect (Spark reuses exchanges, never a Python subplan: without the
+    shared exchange every read re-ran the signature pass and its input,
+    1,800 reads of 600 docs). The pair set is unchanged."""
+    pdf, want = lsh_corpus
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for b in it:
+            seen.add(b.num_rows)
+            yield b
+
+    src = spark.createDataFrame(pdf).repartition(n_parts)
+    assert src.rdd.getNumPartitions() == n_parts
+    src = src.mapInArrow(counted, src.schema)
+    rows = DD.minhash_lsh_pairs(src).collect()
+    assert seen.value == len(pdf)
+    got = {(r.id_a, r.id_b) for r in rows}
+    assert len(rows) == len(got) == 518
+    assert got == want
+    assert all(r.est_jaccard >= 0.5 for r in rows)
+    # the exchange is by column with no count, so AQE coalesces it and a
+    # small corpus's pairs reach connected_components in one partition
+    # (its zero-round case); a fixed count would hand on that many
+    assert DD.minhash_lsh_pairs(src).rdd.getNumPartitions() == 1
+
+
 def test_embedding_neardup_recall(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     near = (
