@@ -13,10 +13,11 @@ and prints each layout's median, quartiles and Spark job count per rep.
 
 ``lsh`` times ``minhash_lsh_pairs`` (the ``curation`` workload's
 parameters) over ``exact_dedup`` of a 2,500-doc ``perfbench.gen``
-corpus (seed 1), and prints the median, quartiles and Spark job count
-per rep, plus how many rows a Python pass between ``exact_dedup`` and
-``minhash_lsh_pairs`` reads per document in one call (an accumulator;
-1.0 when the signature pass runs once per document).
+corpus (seed 1), once as read and once ``cache()``d, and prints each
+input's median, quartiles and Spark job count per rep, plus how many
+rows a Python pass between that input and ``minhash_lsh_pairs`` reads
+per document in one call (an accumulator; 1.0 when the signature pass
+runs once per document).
 
 ``refresh`` walks the five watermark consumers (``refresh_ivf_index``,
 ``refresh_pq_index``, ``refresh_ivfpq_index``, ``refresh_postings``,
@@ -110,39 +111,45 @@ def lsh_bench(reps: int = 7, seed: int = 1) -> None:
 
     spark = get_spark(app="lyssandra-bench-lsh", cores=CPUS)
     sc = spark.sparkContext
+    out = {}
     with tempfile.TemporaryDirectory() as d:
         gen.write(gen.documents(seed, Curation.N_DOCS), d)
-        scan = spark.read.parquet(d)
-        times, jobs = [], set()
-        for r in range(reps + 1):  # rep 0 warms up, untimed
-            group = f"lsh:{r}"
-            sc.setJobGroup(group, "bench_extra lsh")
-            t0 = time.perf_counter()
-            _force(minhash_lsh_pairs(exact_dedup(scan), **Curation.DEDUP))
-            if r:
-                times.append(time.perf_counter() - t0)
-                jobs.add(len(sc.statusTracker().getJobIdsForGroup(group)))
-        sc.setJobGroup("lsh:count", "bench_extra lsh upstream reads")
-        seen = sc.accumulator(0)
+        for name in ("read", "cached"):
+            docs = exact_dedup(spark.read.parquet(d))
+            if name == "cached":
+                docs = docs.cache()
+            n_docs = docs.count()
+            times, jobs = [], set()
+            for r in range(reps + 1):  # rep 0 warms up, untimed
+                group = f"lsh:{name}:{r}"
+                sc.setJobGroup(group, f"bench_extra lsh {name}")
+                t0 = time.perf_counter()
+                _force(minhash_lsh_pairs(docs, **Curation.DEDUP))
+                if r:
+                    times.append(time.perf_counter() - t0)
+                    jobs.add(len(sc.statusTracker().getJobIdsForGroup(group)))
+            sc.setJobGroup(f"lsh:{name}:count", "bench_extra lsh upstream reads")
+            seen = sc.accumulator(0)
 
-        def counted(it):
-            for b in it:
-                seen.add(b.num_rows)
-                yield b
+            def counted(it, seen=seen):
+                for b in it:
+                    seen.add(b.num_rows)
+                    yield b
 
-        docs = exact_dedup(scan)
-        pairs = minhash_lsh_pairs(
-            docs.mapInArrow(counted, docs.schema), **Curation.DEDUP)
-        n_pairs = len(pairs.collect())
-        n_docs = docs.count()
+            pairs = minhash_lsh_pairs(
+                docs.mapInArrow(counted, docs.schema), **Curation.DEDUP)
+            n_pairs = len(pairs.collect())
+            docs.unpersist()
+            q1, med, q3 = statistics.quantiles(times, n=4)
+            out[name] = {
+                "docs": n_docs, "pairs": n_pairs, "median_s": round(med, 3),
+                "q1_s": round(q1, 3), "q3_s": round(q3, 3),
+                "jobs": sorted(jobs),
+                "upstream_reads_per_doc": round(seen.value / n_docs, 3),
+            }
     spark.stop()
-    q1, med, q3 = statistics.quantiles(times, n=4)
-    print(json.dumps({
-        "metric": "minhash_lsh_pairs on the curation corpus", "unit": "sec",
-        "reps": reps, "cores": CPUS, "docs": n_docs, "pairs": n_pairs,
-        "median_s": round(med, 3), "q1_s": round(q1, 3), "q3_s": round(q3, 3),
-        "jobs": sorted(jobs), "upstream_reads_per_doc": round(seen.value / n_docs, 3),
-    }))
+    print(json.dumps({"metric": "minhash_lsh_pairs on the curation corpus",
+                      "unit": "sec", "reps": reps, "cores": CPUS, **out}))
 
 
 def refresh_bench(n_rows: int = 600, dim: int = 16, seed: int = 1) -> None:

@@ -825,16 +825,14 @@ def minhash_lsh_pairs(
         )
     # One keyed exchange over the signature pass, read by the band
     # self-join and both verification joins: AQE materializes it once and
-    # reuses it. Spark reuses exchanges but never a Python subplan, so
-    # without it each read re-ran the pass and its input (3 passes of
-    # ~0.6 s each per call on 2,500 docs). By column with no count, so AQE
-    # can coalesce it: a fixed count hands the pairs to
-    # connected_components in that many partitions and costs its
-    # zero-round exit. Under sort-merge joins the verification joins read
-    # it as is (already partitioned by id). No cache: nothing outlives the
-    # call. A cached input (``df.cache()``) defeats the reuse: the joins
-    # re-instance its in-memory relation and AQE does not match the
-    # copies, so there the pass still runs once per read (4 per doc).
+    # reuses it, because Spark reuses exchanges but never a Python
+    # subplan. By column with no count, so AQE can coalesce it: a fixed
+    # count hands the pairs to connected_components in that many
+    # partitions and costs its zero-round exit. No cache: nothing outlives
+    # the call. Over a cache()d input there is no reuse: AQE gives each
+    # read of the in-memory relation its own cache stage, and exchanges
+    # over different stages never compare equal, so the pass runs once
+    # per read (4 per doc).
     sigs = minhash_signatures(
         df, id_col, text_col, n_perm, ngram_bytes, seed
     ).repartition(id_col)
@@ -922,9 +920,7 @@ def _simhash_block(texts_buf, ngram_bytes: int) -> np.ndarray:
     have bit b set than clear (sum of +-1 over windows > 0, i.e.
     2 * ones > count). Docs with no whole window hash to 0. The per-bit
     counts are segment sums over the doc's windows, so the working set is
-    O(windows); a (windows x 64) int64 +-1 matrix scattered with
-    ``np.add.at`` took ~6 GB and 4-7x the time on one 8,192-row batch of
-    ~700 B texts (bit-identical results, pinned by a test).
+    O(windows).
     """
     val = np.zeros(len(texts_buf[1]) - 1, dtype=np.uint64)
     h32, seg_starts, doc_ids = _doc_windows(texts_buf, ngram_bytes)

@@ -300,13 +300,25 @@ def lsh_corpus():
     return pdf, pairs
 
 
-@pytest.mark.parametrize("n_parts", [1, 3, 8])
-def test_minhash_lsh_pairs_one_signature_pass_per_doc(spark, lsh_corpus, n_parts):
+@pytest.mark.parametrize(
+    "n_parts, cached, reads",
+    [(1, False, 1), (3, False, 1), (8, False, 1), (3, True, 4)],
+    ids=["1", "3", "8", "3-cached"],
+)
+def test_minhash_lsh_pairs_one_signature_pass_per_doc(
+    spark, lsh_corpus, n_parts, cached, reads
+):
     """The band self-join and both verification joins read ONE shuffle of
     the signatures, so an upstream Python pass sees each document once per
     collect (Spark reuses exchanges, never a Python subplan: without the
     shared exchange every read re-ran the signature pass and its input,
-    1,800 reads of 600 docs). The pair set is unchanged."""
+    1,800 reads of 600 docs). Over a cache()d input there is no reuse:
+    AQE gives each read of an in-memory relation its own cache query
+    stage, and exchanges over different stages never compare equal, so
+    the pass runs once per read, 4 per doc (both sides of the band
+    self-join and both verification joins), as without the shared
+    exchange; pinned exactly so that a change either way shows. The pair
+    set is unchanged."""
     pdf, want = lsh_corpus
     seen = spark.sparkContext.accumulator(0)
 
@@ -315,19 +327,25 @@ def test_minhash_lsh_pairs_one_signature_pass_per_doc(spark, lsh_corpus, n_parts
             seen.add(b.num_rows)
             yield b
 
-    src = spark.createDataFrame(pdf).repartition(n_parts)
-    assert src.rdd.getNumPartitions() == n_parts
-    src = src.mapInArrow(counted, src.schema)
-    rows = DD.minhash_lsh_pairs(src).collect()
-    assert seen.value == len(pdf)
-    got = {(r.id_a, r.id_b) for r in rows}
-    assert len(rows) == len(got) == 518
-    assert got == want
-    assert all(r.est_jaccard >= 0.5 for r in rows)
-    # the exchange is by column with no count, so AQE coalesces it and a
-    # small corpus's pairs reach connected_components in one partition
-    # (its zero-round case); a fixed count would hand on that many
-    assert DD.minhash_lsh_pairs(src).rdd.getNumPartitions() == 1
+    docs = spark.createDataFrame(pdf).repartition(n_parts)
+    if cached:
+        docs = docs.cache()
+    try:
+        assert docs.rdd.getNumPartitions() == n_parts
+        src = docs.mapInArrow(counted, docs.schema)
+        rows = DD.minhash_lsh_pairs(src).collect()
+        assert seen.value == reads * len(pdf)
+        got = {(r.id_a, r.id_b) for r in rows}
+        assert len(rows) == len(got) == 518
+        assert got == want
+        assert all(r.est_jaccard >= 0.5 for r in rows)
+        # the exchange is by column with no count, so AQE coalesces it and
+        # a small corpus's pairs reach connected_components in one
+        # partition (its zero-round case); a fixed count would hand on
+        # that many
+        assert DD.minhash_lsh_pairs(src).rdd.getNumPartitions() == 1
+    finally:
+        docs.unpersist()
 
 
 def test_embedding_neardup_recall(spark, sf_dir):
